@@ -507,3 +507,216 @@ def test_datetime_pruning_exact_boundary(spark, tmp_path):
     r3 = ZarrReader(store2, "g", schema2, partition_rows=100)
     list(r3.pushFilters([GreaterThanOrEqual(("t",), dt.datetime(2020, 1, 1, 0, 16, 39, 500000))]))
     assert not [p for p in r3.partitions() if p.stop > p.start]
+
+
+# -- partition planner --------------------------------------------------------
+
+
+def _planner_store(tmp_path, n_chunks=16, chunk_rows=100):
+    from zarr_datafusion_search_spark.sources.typemap import group_schema
+
+    store = str(tmp_path / "plan.zarr")
+    n = n_chunks * chunk_rows
+    zarrv3.write_group(
+        store, "g",
+        {"x": np.arange(n, dtype=np.int64), "k": np.arange(n, dtype=np.int64) // chunk_rows},
+        chunk_rows=chunk_rows,
+    )
+    group = zarrv3.open_group(store, "g")
+    return store, group_schema({c: m.dtype for c, m in group.arrays.items()})
+
+
+@pytest.mark.parametrize("slots", [1, 3, 4, 16, 40])
+@pytest.mark.parametrize(
+    "filters,survivors",
+    [
+        ("all", list(range(16))),
+        ("ge", list(range(9, 16))),           # one contiguous run
+        ("in", [0, 3, 4, 5, 11, 15]),         # scattered runs
+        ("none", []),
+    ],
+)
+def test_default_plan_is_one_balanced_wave(tmp_path, slots, filters, survivors):
+    """Default options: the chunks that survive pruning are dealt out over
+    min(survivors, slots) partitions whose chunk counts differ by at most
+    one, and every surviving chunk lands in exactly one partition."""
+    from pyspark.sql.datasource import GreaterThan, GreaterThanOrEqual, In
+    from zarr_datafusion_search_spark.sources.zarr_datasource import RowRange, ZarrReader
+
+    store, schema = _planner_store(tmp_path)
+    pushed = {
+        "ge": [GreaterThanOrEqual(("x",), 950)],
+        "in": [In(("k",), tuple(survivors))],
+        "none": [GreaterThan(("x",), 10**9)],
+    }.get(filters, [])
+    r = ZarrReader(store, "g", schema, slots=slots)
+    assert not list(r.pushFilters(pushed))
+    parts = r.partitions()
+    if not survivors:
+        assert parts == [RowRange(0, 0)]
+        return
+    assert len(parts) == min(len(survivors), slots)
+    owners = [[p for p in parts if p.start <= c * 100 < p.stop] for c in survivors]
+    assert all(len(o) == 1 for o in owners)
+    sizes = [sum(p.start <= c * 100 < p.stop for c in survivors) for p in parts]
+    assert max(sizes) - min(sizes) <= 1
+    assert all(p.start % 100 == 0 and p.stop % 100 == 0 for p in parts)
+
+
+def test_default_plan_skips_pruned_chunks_inside_a_partition(tmp_path, monkeypatch):
+    """A balanced partition can step over chunks pruning dropped; read()
+    must not decode them, and must return exactly the matching rows."""
+    from pyspark.sql.datasource import In
+    from zarr_datafusion_search_spark.sources.zarr_datasource import ZarrReader
+
+    store, schema = _planner_store(tmp_path)
+    keep = (0, 3, 4, 5, 11, 15)
+    r = ZarrReader(store, "g", schema, slots=2)
+    list(r.pushFilters([In(("k",), keep)]))
+    parts = r.partitions()
+    assert len(parts) == 2 and parts[0].stop - parts[0].start > 3 * 100  # spans a gap
+    decoded = []
+    real = zarrv3.ZarrArrayMeta.decode_chunk
+
+    def spy(self, raw, rows):
+        decoded.append(self.name)
+        return real(self, raw, rows)
+
+    monkeypatch.setattr(zarrv3.ZarrArrayMeta, "decode_chunk", spy)
+    got = sorted(x for p in parts for b in r.read(p) for x in b.column("x").to_pylist())
+    assert got == [x for c in keep for x in range(c * 100, c * 100 + 100)]
+    assert len(decoded) == len(keep) * 2  # two columns, surviving chunks only
+
+
+def test_default_plan_caps_partition_rows():
+    """A default partition never exceeds DEFAULT_PARTITION_ROWS (whole
+    chunks), even when that needs more partitions than task slots."""
+    from zarr_datafusion_search_spark.sources.zarr_datasource import (
+        DEFAULT_PARTITION_ROWS,
+        plan_partitions,
+    )
+
+    c = DEFAULT_PARTITION_ROWS // 2
+    spans = [(i * c, (i + 1) * c) for i in range(9)]
+    parts = plan_partitions(spans, c, None, slots=2)
+    assert len(parts) == 5
+    assert all(p.stop - p.start <= DEFAULT_PARTITION_ROWS for p in parts)
+    assert [p.start for p in parts] == [0, 2 * c, 4 * c, 6 * c, 8 * c]
+
+
+def test_default_plan_empty_store(tmp_path):
+    from zarr_datafusion_search_spark.sources.typemap import group_schema
+    from zarr_datafusion_search_spark.sources.zarr_datasource import RowRange, ZarrReader
+
+    store = str(tmp_path / "empty.zarr")
+    zarrv3.write_group(store, "g", {"x": np.arange(0, dtype=np.int64), "s": []})
+    group = zarrv3.open_group(store, "g")
+    schema = group_schema({c: m.dtype for c, m in group.arrays.items()})
+    r = ZarrReader(store, "g", schema, slots=4)
+    assert r.partitions() == [RowRange(0, 0)]
+    assert list(r.read(RowRange(0, 0))) == []
+
+
+def test_stream_plan_shares_the_batch_planner(tmp_path):
+    """The stream reader plans with the same helper: the rows between two
+    offsets (starting mid-chunk) are covered once, no chunk is split across
+    partitions, and the default plan is one wave over the task slots."""
+    from zarr_datafusion_search_spark.sources.zarr_datasource import ZarrStreamReader
+
+    store, schema = _planner_store(tmp_path)
+    for slots in (1, 4, 32):
+        r = ZarrStreamReader(store, "g", schema, slots=slots)
+        parts = r.partitions({"rows": 250}, {"rows": 1430})
+        assert parts[0].start == 250 and parts[-1].stop == 1430
+        assert all(a.stop == b.start for a, b in zip(parts, parts[1:]))
+        assert all(p.stop % 100 == 0 for p in parts[:-1])
+        assert len(parts) == min(13, slots)  # 13 chunk spans in [250, 1430)
+        rows = [x for p in parts for b in r.read(p) for x in b.column("x").to_pylist()]
+        assert rows == list(range(250, 1430))
+    explicit = ZarrStreamReader(store, "g", schema, partition_rows=300)
+    parts = explicit.partitions({"rows": 0}, {"rows": 1600})
+    assert [p.stop - p.start for p in parts] == [300] * 5 + [100]
+
+
+def test_zarr_table_passes_session_task_slots(spark, tmp_path):
+    """to_df plans over the session's defaultParallelism: a 16-chunk full
+    scan runs as one task per slot, not one per chunk."""
+    store, _ = _planner_store(tmp_path)
+    df = ZarrTable(store, "g").to_df(spark)
+    assert df.rdd.getNumPartitions() == min(16, spark.sparkContext.defaultParallelism)
+    assert df.count() == 1600
+
+
+# -- pushed filters must not leak into later queries --------------------------
+
+
+def _dated_store(tmp_path):
+    store = str(tmp_path / "dated.zarr")
+    n, chunk = 16 * 256, 256
+    dates = np.datetime64("2023-01-01", "ms") + (
+        np.arange(n, dtype=np.int64) * 3_600_000
+    ).astype("timedelta64[ms]")
+    zarrv3.write_group(
+        store, "meta",
+        {"date": dates, "collection": [f"collection_{'abcd'[i % 4]}" for i in range(n)]},
+        chunk_rows=chunk,
+    )
+    return store, dates
+
+
+def test_sql_view_reused_after_filtered_query(spark, tmp_path):
+    """A ZarrTable registered once answers every later query in full: the
+    filters a date range pushed must not narrow a later count or GROUP BY,
+    and the range itself still prunes to 2 of 16 chunks."""
+    import datetime as dt
+
+    from pyspark.sql.datasource import GreaterThanOrEqual, LessThan
+    from zarr_datafusion_search_spark import SessionContext
+    from zarr_datafusion_search_spark.sources.zarr_datasource import ZarrDataSource
+
+    store, dates = _dated_store(tmp_path)
+    n = len(dates)
+    ctx = SessionContext(spark)
+    ctx.register_table("dated", ZarrTable(store, "/meta"))
+    lo, hi = "2023-01-12 00:00:00", "2023-01-30 00:00:00"
+    in_range = int(((dates >= np.datetime64(lo)) & (dates < np.datetime64(hi))).sum())
+    count_all = "SELECT count(*) FROM dated"
+    assert ctx.sql(count_all).collect()[0][0] == n
+    ranged = ctx.sql(
+        f"SELECT count(*) FROM dated WHERE date >= TIMESTAMP '{lo}' AND date < TIMESTAMP '{hi}'"
+    )
+    assert ranged.collect()[0][0] == in_range
+    assert ctx.sql(count_all).collect()[0][0] == n
+    ctx.sql(f"SELECT * FROM dated WHERE date >= TIMESTAMP '{lo}'").collect()
+    groups = ctx.sql("SELECT collection, count(*) AS c FROM dated GROUP BY collection")
+    assert sorted(r.c for r in groups.collect()) == [n // 4] * 4
+    assert ctx.table("dated").count() == n
+
+    reader = ZarrDataSource({"path": store, "group": "/meta"}).reader(
+        ZarrTable(store, "/meta").schema
+    )
+    pushed = [
+        GreaterThanOrEqual(("date",), dt.datetime.fromisoformat(lo)),
+        LessThan(("date",), dt.datetime.fromisoformat(hi)),
+    ]
+    assert not list(reader.pushFilters(pushed))
+    covered = sum(p.stop - p.start for p in reader.partitions())
+    assert covered == 2 * 256
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason=(
+        "Spark 4.1 PythonDataSourceV2 caches one readInfo (the pickled "
+        "reader with its claimed filters, plus its partitions) per relation; "
+        "PythonScanBuilder.pushFilters replaces it only when filters are "
+        "pushed, so reusing a DataFrame after a filtered action reads the "
+        "filtered rows. SessionContext.sql re-resolves views; a bare "
+        "DataFrame cannot be fixed from the data source."
+    ),
+)
+def test_dataframe_reused_after_filtered_action(spark, tmp_path):
+    store, dates = _dated_store(tmp_path)
+    df = ZarrTable(store, "/meta").to_df(spark)
+    assert df.filter("collection = 'collection_a'").count() == len(dates) // 4
+    assert df.count() == len(dates)

@@ -103,11 +103,18 @@ class SessionContext:
 
     def __init__(self, spark: SparkSession | None = None, **session_kwargs):
         self.spark = spark or build_session(**session_kwargs)
+        self._zarr_views: dict[str, ZarrTable] = {}
+        self._used_views: set[str] = set()
 
     # reference: ctx.register_table_provider(name, table) — README.md:37-39
     def register_table(self, name: str, table: "ZarrTable | DataFrame | str") -> None:
+        self._zarr_views.pop(name, None)
+        self._used_views.discard(name)
+        if isinstance(table, str) and _is_zarr_path(table):
+            table = ZarrTable(table)
         if isinstance(table, ZarrTable):
             table.register(self.spark, name)
+            self._zarr_views[name] = table
         elif isinstance(table, DataFrame):
             table.createOrReplaceTempView(name)
         elif isinstance(table, str):  # path to parquet/csv/json by extension
@@ -133,10 +140,26 @@ class SessionContext:
         return names
 
     def sql(self, query: str) -> DataFrame:
+        self._fresh_zarr_views()
         return self.spark.sql(query)
 
     def table(self, name: str) -> DataFrame:
+        self._fresh_zarr_views()
         return self.spark.table(name)
+
+    def _fresh_zarr_views(self) -> None:
+        """Give each query its own relation over every registered ZarrTable.
+
+        Spark's Python data source relation (``PythonDataSourceV2``) caches
+        the reader that filter pushdown pickled, claimed filters included,
+        and ``PythonScanBuilder.pushFilters`` replaces that cache only when a
+        query pushes filters. A view reused after a filtered query would
+        hand a query that pushes none the filtered rows, so a view some
+        earlier query may have resolved is registered again first.
+        """
+        for name in self._used_views:
+            self._zarr_views[name].register(self.spark, name)
+        self._used_views = set(self._zarr_views)
 
     def _read_path(self, path: str) -> DataFrame:
         if path.endswith(".parquet"):
@@ -145,6 +168,8 @@ class SessionContext:
             return self.spark.read.option("header", "true").csv(path)
         if path.endswith((".json", ".jsonl", ".ndjson")):
             return self.spark.read.json(path)
-        if path.endswith(".zarr") or os.path.exists(os.path.join(path, "zarr.json")):
-            return ZarrTable(path).to_df(self.spark)
         raise ValueError(f"cannot infer format for {path}")
+
+
+def _is_zarr_path(path: str) -> bool:
+    return path.endswith(".zarr") or os.path.exists(os.path.join(path, "zarr.json"))

@@ -8,6 +8,8 @@ whole-table-in-one-batch scan (src/table_provider.rs:193-220,237):
 - **Chunk-aligned partitions**: ``partitions()`` maps row ranges aligned to
   Zarr chunk boundaries to Spark ``InputPartition``s, so a 100 TB store scans
   in parallel across executors and no task materializes the whole table.
+  By default the chunks that survive pruning are dealt out as one wave of
+  near-equal ranges, one per task slot (see :func:`plan_partitions`).
   (This is the design the reference's orphaned ``FileSource`` experiment was
   reaching for — src/source.rs:28-33.)
 - **Column pruning at the source**: only the Zarr arrays named in the read
@@ -61,11 +63,10 @@ from zarr_datafusion_search_spark.sources.typemap import (
     zarr_to_arrow_type,
 )
 
-# Default rows per input partition. Chosen so a partition of a wide-ish table
-# of scalar columns stays well under executor memory; tune per deployment with
-# option("partition_rows", ...).
+# Largest default input partition. Chosen so a partition of a wide-ish table
+# of scalar columns stays well under executor memory; an explicit
+# option("partition_rows", ...) replaces the default plan.
 DEFAULT_PARTITION_ROWS = 1 << 21  # ~2M rows
-_TARGET_PARTS = 64  # default-mode fan-out floor for small stores
 
 
 @dataclass
@@ -74,15 +75,54 @@ class RowRange(InputPartition):
     stop: int
 
 
+def plan_partitions(
+    spans: Sequence[tuple[int, int]],
+    chunk_rows: int,
+    partition_rows: int | None,
+    slots: int,
+) -> list[RowRange]:
+    """Group ``spans`` — ascending row ranges of the lead chunks to read —
+    into input partitions (shared by the batch and the stream reader).
+
+    By default (``partition_rows`` is None) the spans are dealt out as
+    ``min(len(spans), slots)`` contiguous runs whose span counts differ by
+    at most one, so the scan runs as one wave of tasks: each task costs a
+    fixed Python-worker start-up whatever it reads, so more waves of smaller
+    tasks only add that cost. Runs are split further when one would exceed
+    ``DEFAULT_PARTITION_ROWS``. A run may step over chunks that pruning
+    dropped; the batch reader skips those. An explicit ``partition_rows``
+    coalesces adjacent spans up to that many rows (at least one chunk).
+    """
+    if not spans:
+        return []
+    if partition_rows is None:
+        cap = max(1, DEFAULT_PARTITION_ROWS // chunk_rows)
+        n_parts = min(len(spans), max(slots, -(-len(spans) // cap)))
+        q, r = divmod(len(spans), n_parts)
+        parts, i = [], 0
+        for k in range(n_parts):
+            j = i + q + (k < r)
+            parts.append(RowRange(spans[i][0], spans[j - 1][1]))
+            i = j
+        return parts
+    rows_per_part = max(chunk_rows, partition_rows // chunk_rows * chunk_rows)
+    parts = []
+    for lo, hi in spans:
+        if parts and parts[-1].stop == lo and hi - parts[-1].start <= rows_per_part:
+            parts[-1].stop = hi
+        else:
+            parts.append(RowRange(lo, hi))
+    return parts
+
+
 def _range_batch(group, columns, arrow_types, lo, hi):
-    """Decode one chunk-local row range of the group into an Arrow batch
-    (shared by the batch reader and the stream reader)."""
+    """Decode one chunk-local row range of the group into an Arrow batch."""
     import pyarrow as pa
 
     cols = []
     for c in columns:
         meta = group.arrays[c]
-        vals = meta.read_range(lo, hi)
+        vals = meta.read_values(lo, hi)
         if meta.dtype.kind == "datetime64":
             # int64 ticks in the array's unit -> reinterpret, then
             # rescale to Spark's microsecond timestamps
@@ -91,14 +131,69 @@ def _range_batch(group, columns, arrow_types, lo, hi):
         elif meta.dtype.kind == "raw":
             # numpy void arrays aren't Arrow-convertible directly
             arr = pa.array([bytes(v) for v in vals], type=pa.binary())
-        elif meta.dtype.kind == "bytes":
-            arr = pa.array(list(vals), type=pa.binary())
         else:
-            arr = pa.array(vals)
+            arr = vals if isinstance(vals, pa.Array) else pa.array(vals)
             if arr.type != arrow_types[c]:
                 arr = arr.cast(arrow_types[c])
         cols.append(arr)
     return pa.record_batch(cols, names=columns)
+
+
+def _options_int(options, key: str) -> int | None:
+    value = options.get(key)
+    return None if value is None else int(value)
+
+
+class _ZarrScan:
+    """State the batch and the stream reader share: the read columns, the
+    lead chunk size and the partition plan."""
+
+    def __init__(
+        self,
+        path: str,
+        group_path: str,
+        schema: StructType,
+        partition_rows: int | None = None,
+        slots: int | None = None,
+    ):
+        self._path = path
+        self._group_path = group_path
+        self._schema = schema
+        self._columns = [f.name for f in schema.fields]
+        group = zarrv3.open_group(path, group_path)
+        missing = [c for c in self._columns if c not in group.arrays]
+        if missing:
+            raise ValueError(f"zarr group has no arrays named {missing}")
+        self._n_rows = group.n_rows
+        # Partitions align to the largest chunk among the read columns so
+        # most chunks are read by exactly one task; columns with smaller
+        # chunks are sliced per-range (decode is still chunk-local).
+        self._chunk_rows = max(group.arrays[c].chunk_rows for c in self._columns)
+        self._partition_rows = partition_rows
+        # without a slot count from the session, this host's usable CPUs
+        # (``local[*]``'s parallelism)
+        self._slots = slots or len(os.sched_getaffinity(0))
+
+    def _plan(self, spans) -> list[RowRange]:
+        return plan_partitions(
+            spans, self._chunk_rows, self._partition_rows, self._slots
+        )
+
+    def _decode(self, partition: RowRange, keep=None):
+        """Arrow batches of ``partition``, one per lead-chunk slice so no task
+        holds its whole range; a slice starts mid-chunk when the range does.
+        Slices for which ``keep(group, lo, hi)`` is false are skipped."""
+        group = zarrv3.open_group(self._path, self._group_path)
+        arrow_types = {
+            c: zarr_to_arrow_type(group.arrays[c].dtype) for c in self._columns
+        }
+        step = self._chunk_rows
+        lo = partition.start
+        while lo < partition.stop:
+            hi = min((lo // step + 1) * step, partition.stop)
+            if keep is None or keep(group, lo, hi):
+                yield _range_batch(group, self._columns, arrow_types, lo, hi)
+            lo = hi
 
 
 class ZarrDataSource(DataSource):
@@ -135,25 +230,22 @@ class ZarrDataSource(DataSource):
             fields = {c: fields[c] for c in keep}
         return group_schema(fields)
 
-    def reader(self, schema: StructType) -> "ZarrReader":
-        return ZarrReader(
+    def _scan_args(self, schema: StructType) -> dict:
+        # "task_slots" is not a tuning knob: ZarrTable.to_df sets it to the
+        # session's defaultParallelism, which this planner process cannot see
+        return dict(
             path=self._path_option(),
             group_path=self.options.get("group", "/"),
             schema=schema,
-            partition_rows=int(
-                self.options.get("partition_rows", DEFAULT_PARTITION_ROWS)
-            ),
+            partition_rows=_options_int(self.options, "partition_rows"),
+            slots=_options_int(self.options, "task_slots"),
         )
 
+    def reader(self, schema: StructType) -> "ZarrReader":
+        return ZarrReader(**self._scan_args(schema))
+
     def streamReader(self, schema: StructType) -> "ZarrStreamReader":
-        return ZarrStreamReader(
-            path=self._path_option(),
-            group_path=self.options.get("group", "/"),
-            schema=schema,
-            partition_rows=int(
-                self.options.get("partition_rows", DEFAULT_PARTITION_ROWS)
-            ),
-        )
+        return ZarrStreamReader(**self._scan_args(schema))
 
     def writer(self, schema: StructType, overwrite: bool) -> "ZarrWriter":
         return ZarrWriter(
@@ -166,34 +258,9 @@ class ZarrDataSource(DataSource):
         )
 
 
-class ZarrReader(DataSourceReader):
-    def __init__(
-        self, path: str, group_path: str, schema: StructType, partition_rows: int
-    ):
-        self._path = path
-        self._group_path = group_path
-        self._schema = schema
-        self._columns = [f.name for f in schema.fields]
-        group = zarrv3.open_group(path, group_path)
-        missing = [c for c in self._columns if c not in group.arrays]
-        if missing:
-            raise ValueError(f"zarr group has no arrays named {missing}")
-        self._n_rows = group.n_rows
-        # Partition granularity: align to the largest chunk among the read
-        # columns so most chunks are read by exactly one task; columns with
-        # smaller chunks are sliced per-range (decode is still chunk-local).
-        # The explicit partition_rows option is honored as-is; the DEFAULT is
-        # additionally capped so small stores still fan out (~TARGET_PARTS
-        # tasks) instead of decoding serially in one task, while big stores
-        # keep ~partition_rows-sized tasks (amortizing per-task overhead at
-        # cluster scale). 1M-row full scan: 1.05s -> 0.30s on local[32].
-        lead = max(group.arrays[c].chunk_rows for c in self._columns)
-        if partition_rows == DEFAULT_PARTITION_ROWS:
-            partition_rows = min(
-                partition_rows, max(1, self._n_rows // _TARGET_PARTS)
-            )
-        self._rows_per_part = max(lead, (partition_rows // lead) * lead or lead)
-        self._chunk_rows = lead
+class ZarrReader(_ZarrScan, DataSourceReader):
+    def __init__(self, *args, **kwargs):
+        super().__init__(*args, **kwargs)
         self._filters: list[Filter] = []
 
     # -- filter pushdown ----------------------------------------------------
@@ -232,31 +299,15 @@ class ZarrReader(DataSourceReader):
     # -- planning / execution -------------------------------------------------
 
     def partitions(self) -> Sequence[RowRange]:
-        n = self._n_rows
-        if n == 0:
-            return [RowRange(0, 0)]
         # chunk pruning: with per-chunk min/max stats (written by our sink
         # into the array attributes) and claimed filters, whole chunks that
         # cannot satisfy the conjunction are never read — the Zarr analogue
-        # of parquet row-group pruning. Surviving chunk ranges coalesce up
-        # to rows_per_part.
+        # of parquet row-group pruning.
         group = zarrv3.open_group(self._path, self._group_path)
-        step = self._chunk_rows
-        survivors: list[tuple[int, int]] = []
-        for lo in range(0, n, step):
-            hi = min(lo + step, n)
-            if self._chunk_may_match(group, lo, hi):
-                if (
-                    survivors
-                    and survivors[-1][1] == lo
-                    and (hi - survivors[-1][0]) <= self._rows_per_part
-                ):
-                    survivors[-1] = (survivors[-1][0], hi)
-                else:
-                    survivors.append((lo, hi))
-        if not survivors:
-            return [RowRange(0, 0)]
-        return [RowRange(lo, hi) for lo, hi in survivors]
+        n, step = self._n_rows, self._chunk_rows
+        chunks = [(lo, min(lo + step, n)) for lo in range(0, n, step)]
+        survivors = [c for c in chunks if self._chunk_may_match(group, *c)]
+        return self._plan(survivors) or [RowRange(0, 0)]
 
     def _chunk_may_match(self, group: zarrv3.ZarrGroup, lo: int, hi: int) -> bool:
         """False only when the stats PROVE no row in [lo, hi) can pass every
@@ -349,15 +400,8 @@ class ZarrReader(DataSourceReader):
         return v
 
     def read(self, partition: RowRange) -> Iterator["pa.RecordBatch"]:  # noqa: F821
-        group = zarrv3.open_group(self._path, self._group_path)
-        arrow_types = {
-            c: zarr_to_arrow_type(group.arrays[c].dtype) for c in self._columns
-        }
-        # Emit one batch per lead-chunk so no task holds its whole range.
-        step = self._chunk_rows
-        for lo in range(partition.start, partition.stop, step):
-            hi = min(lo + step, partition.stop)
-            batch = _range_batch(group, self._columns, arrow_types, lo, hi)
+        # a partition may span chunks that pruning dropped: skip them again
+        for batch in self._decode(partition, self._chunk_may_match):
             if self._filters:
                 mask = self._eval_filters(batch)
                 if mask is not None:
@@ -576,7 +620,7 @@ class ZarrWriter(DataSourceArrowWriter):
         shutil.rmtree(self._staging, ignore_errors=True)
 
 
-class ZarrStreamReader(DataSourceStreamReader):
+class ZarrStreamReader(_ZarrScan, DataSourceStreamReader):
     """Streaming source that TAILS a growing Zarr store: offsets are
     committed row counts, each micro-batch reads the chunk-aligned row
     ranges appended since the last batch (``spark.readStream
@@ -590,28 +634,11 @@ class ZarrStreamReader(DataSourceStreamReader):
     grows the shape; a store REPLACED with fewer rows is a contract
     violation and fails loudly rather than silently re-reading.
 
-    Partitions between two offsets are chunk-aligned row ranges (same
-    fan-out policy as the batch reader), decoded executor-side with the
-    identical Arrow path; the boundary chunk of a prior batch is re-read
+    Partitions between two offsets are chunk-aligned row ranges planned by
+    the batch reader's :func:`plan_partitions`, decoded executor-side with
+    the identical Arrow path; the boundary chunk of a prior batch is re-read
     only for its newly appended tail rows.
     """
-
-    def __init__(
-        self, path: str, group_path: str, schema: StructType, partition_rows: int
-    ):
-        self._path = path
-        self._group_path = group_path
-        self._schema = schema
-        self._columns = [f.name for f in schema.fields]
-        group = zarrv3.open_group(path, group_path)
-        missing = [c for c in self._columns if c not in group.arrays]
-        if missing:
-            raise ValueError(f"zarr group has no arrays named {missing}")
-        lead = max(group.arrays[c].chunk_rows for c in self._columns)
-        if partition_rows == DEFAULT_PARTITION_ROWS:
-            partition_rows = min(partition_rows, max(1, group.n_rows or 1))
-        self._rows_per_part = max(lead, (partition_rows // lead) * lead or lead)
-        self._chunk_rows = lead
 
     def initialOffset(self) -> dict:
         # new streams start at the beginning of the store
@@ -644,40 +671,19 @@ class ZarrStreamReader(DataSourceStreamReader):
                 "store was replaced with fewer rows; streams may only tail "
                 "appends"
             )
-        if hi == lo:
-            return [RowRange(lo, lo)]
-        step = self._rows_per_part
-        # align splits to chunk boundaries ABOVE lo so no chunk is decoded
-        # by two tasks of the same batch
-        first_split = -(-lo // self._chunk_rows) * self._chunk_rows
-        bounds = [lo]
-        b = max(first_split, self._chunk_rows)
-        while b < hi:
-            if b > bounds[-1] and (b - bounds[-1]) >= step:
-                bounds.append(b)
-            b += self._chunk_rows
-        bounds.append(hi)
-        return [
-            RowRange(bounds[i], bounds[i + 1])
-            for i in range(len(bounds) - 1)
-            if bounds[i + 1] > bounds[i]
+        # spans split at chunk boundaries, so no chunk is decoded by two
+        # tasks of the same batch; the first starts mid-chunk when the
+        # previous batch ended inside one
+        step = self._chunk_rows
+        spans = [
+            (max(lo, c), min(c + step, hi)) for c in range(lo // step * step, hi, step)
         ]
+        return self._plan(spans) or [RowRange(lo, lo)]
 
     def read(self, partition: RowRange) -> Iterator["pa.RecordBatch"]:  # noqa: F821
-        group = zarrv3.open_group(self._path, self._group_path)
-        arrow_types = {
-            c: zarr_to_arrow_type(group.arrays[c].dtype) for c in self._columns
-        }
-        step = self._chunk_rows
-        lo = partition.start
-        while lo < partition.stop:
-            # chunk-local slices, starting mid-chunk when the previous
-            # batch ended inside a chunk
-            hi = min((lo // step + 1) * step, partition.stop)
-            batch = _range_batch(group, self._columns, arrow_types, lo, hi)
+        for batch in self._decode(partition):
             if batch.num_rows:
                 yield batch
-            lo = hi
 
     def commit(self, end: dict) -> None:
         # offsets are externally durable (the store itself); nothing to do

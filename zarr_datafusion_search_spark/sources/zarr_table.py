@@ -59,11 +59,13 @@ class ZarrTable:
     def to_df(
         self, spark: SparkSession, columns: Sequence[str] | None = None
     ) -> DataFrame:
-        """DataFrame over the ``zarr`` data source (chunk-partitioned scan)."""
+        """DataFrame over the ``zarr`` data source (chunk-partitioned scan,
+        planned as one wave over the session's task slots)."""
         _ensure_registered(spark)
         reader = (
             spark.read.format("zarr")
             .option("group", self.group_path)
+            .option("task_slots", str(spark.sparkContext.defaultParallelism))
             .schema(self._pruned(columns))
         )
         if columns:

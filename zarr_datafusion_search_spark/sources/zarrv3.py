@@ -20,11 +20,15 @@ Scope (mirrors what the reference engine consumes / produces):
   Complex, extension, and other datetime units raise, matching
   src/schema.rs:89-122.
 - codecs: ``bytes`` (endian), ``vlen-utf8``, ``vlen-bytes``, ``zstd``,
-  ``gzip``, ``crc32c`` (stripped; no crc32c library bundled), and
-  ``sharding_indexed`` (inner chunks packed per shard object with a uint64
-  offset/nbytes index — the object-count-friendly layout for very large
-  stores). The reference's own fixture uses ``vlen-utf8``+``zstd`` and
-  ``bytes``+``zstd`` (data/zarr_store.zarr/meta/*/zarr.json).
+  ``gzip``, ``crc32c`` (verified by a table-driven CRC-32C, then
+  stripped), and ``sharding_indexed`` (inner chunks packed per shard object
+  with a uint64 offset/nbytes index — the object-count-friendly layout for
+  very large stores). The reference's own fixture uses ``vlen-utf8``+``zstd``
+  and ``bytes``+``zstd`` (data/zarr_store.zarr/meta/*/zarr.json).
+- decoded values: fixed-width chunks become numpy arrays; ``vlen-utf8`` /
+  ``vlen-bytes`` chunks become ``pa.StringArray`` / ``pa.BinaryArray``
+  directly, by framing the VLen body as the Parquet PLAIN page it already
+  is (see :func:`_decode_vlen`), so no Python object is made per string.
 """
 
 from __future__ import annotations
@@ -191,17 +195,99 @@ def _zstd_compress(raw: bytes, level: int = 0) -> bytes:
     return pa.Codec("zstd", compression_level=level).compress(raw, asbytes=True)
 
 
-def _decode_vlen(buf: bytes) -> list[str] | list[bytes]:
-    """numcodecs VLen layout: u32 item count, then (u32 length, payload)*."""
+# Thrift compact-protocol type ids, and the Parquet enum values used below.
+_I32, _I64, _BIN, _LIST, _STRUCT = 5, 6, 8, 9, 12
+_BYTE_ARRAY, _REQUIRED, _UTF8, _PLAIN, _RLE, _DATA_PAGE = 6, 0, 0, 0, 3, 0
+
+
+def _uvarint(n: int) -> bytes:
+    out = bytearray()
+    while n > 0x7F:
+        out.append(n & 0x7F | 0x80)
+        n >>= 7
+    out.append(n)
+    return bytes(out)
+
+
+def _thrift_value(ttype: int, v) -> bytes:
+    if ttype in (_I32, _I64):
+        return _uvarint((v << 1) ^ (v >> 63))  # zigzag
+    if ttype == _BIN:
+        return _uvarint(len(v)) + v
+    if ttype == _STRUCT:
+        return _thrift_struct(v)
+    etype, items = v  # _LIST
+    n = len(items)
+    head = bytes([n << 4 | etype]) if n < 15 else bytes([0xF0 | etype]) + _uvarint(n)
+    return head + b"".join(_thrift_value(etype, x) for x in items)
+
+
+def _thrift_struct(fields) -> bytes:
+    """Compact-protocol struct from ``(field id, type, value)`` triples in
+    ascending id order (every gap here is < 16, so the short field header)."""
+    out, last = bytearray(), 0
+    for fid, ttype, v in fields:
+        out.append((fid - last) << 4 | ttype)
+        out += _thrift_value(ttype, v)
+        last = fid
+    out.append(0)
+    return bytes(out)
+
+
+def _decode_vlen(buf, binary: bool) -> pa.Array:
+    """Decode a numcodecs VLen chunk (u32 item count, then (u32 length,
+    payload) per item) into a ``pa.StringArray`` / ``pa.BinaryArray``.
+
+    After the count, the chunk is byte-for-byte a Parquet PLAIN
+    ``BYTE_ARRAY`` page of required values, so it is framed as a one-page
+    Parquet file (page header + footer, ~150 bytes) and decoded by Arrow's
+    C++ Parquet reader: no Python object per item. ``validate(full=True)``
+    checks offsets and UTF-8; a short or malformed chunk raises
+    :class:`ZarrError`.
+    """
+    import pyarrow.parquet as pq
+
+    buf = memoryview(buf)
+    if len(buf) < 4:
+        raise ZarrError(f"VLen chunk of {len(buf)} bytes has no item count")
     (n,) = struct.unpack_from("<I", buf, 0)
-    off = 4
-    out: list[bytes] = []
-    for _ in range(n):
-        (ln,) = struct.unpack_from("<I", buf, off)
-        off += 4
-        out.append(buf[off : off + ln])
-        off += ln
-    return out
+    body = buf[4:]
+    size = len(body)
+    if size >= 2**31:
+        raise ZarrError(f"VLen chunk of {size} bytes exceeds a Parquet page")
+    page = _thrift_struct([
+        (1, _I32, _DATA_PAGE), (2, _I32, size), (3, _I32, size),
+        (5, _STRUCT, [(1, _I32, n), (2, _I32, _PLAIN), (3, _I32, _RLE), (4, _I32, _RLE)]),
+    ])
+    col_bytes = len(page) + size
+    leaf = [(1, _I32, _BYTE_ARRAY), (3, _I32, _REQUIRED), (4, _BIN, b"v")]
+    if not binary:
+        leaf.append((6, _I32, _UTF8))
+    column = [
+        (1, _I32, _BYTE_ARRAY), (2, _LIST, (_I32, [_PLAIN])), (3, _LIST, (_BIN, [b"v"])),
+        (4, _I32, 0),  # UNCOMPRESSED
+        (5, _I64, n), (6, _I64, col_bytes), (7, _I64, col_bytes),
+        (9, _I64, 4),  # data page offset: right after the leading magic
+    ]
+    footer = _thrift_struct([
+        (1, _I32, 1),
+        (2, _LIST, (_STRUCT, [[(4, _BIN, b"schema"), (5, _I32, 1)], leaf])),
+        (3, _I64, n),
+        (4, _LIST, (_STRUCT, [[
+            (1, _LIST, (_STRUCT, [[(2, _I64, 4), (3, _STRUCT, column)]])),
+            (2, _I64, col_bytes), (3, _I64, n),
+        ]])),
+    ])
+    blob = b"".join(
+        (b"PAR1", page, body, footer, struct.pack("<I", len(footer)), b"PAR1")
+    )
+    try:
+        table = pq.ParquetFile(pa.BufferReader(blob)).read(use_threads=False)
+        arr = table.column(0).combine_chunks()
+        arr.validate(full=True)
+    except (OSError, pa.ArrowException) as e:
+        raise ZarrError(f"corrupt VLen chunk ({n} items, {size} bytes): {e}") from e
+    return arr
 
 
 def _encode_vlen(items: Sequence[bytes]) -> bytes:
@@ -264,8 +350,10 @@ class ZarrArrayMeta:
             return self.codecs[0].get("configuration") or {}
         return None
 
-    def decode_chunk(self, raw: bytes | None, rows: int) -> np.ndarray | list:
-        """Decode one (outer) chunk's bytes into ``rows`` logical values.
+    def decode_chunk(self, raw: bytes | None, rows: int) -> np.ndarray | pa.Array:
+        """Decode one (outer) chunk's bytes into ``rows`` logical values: a
+        numpy array for fixed-width dtypes, an Arrow string/binary array for
+        variable-length ones.
 
         ``raw is None`` means the chunk file is absent → fill value.
         """
@@ -278,7 +366,7 @@ class ZarrArrayMeta:
 
     def _decode_pipeline(
         self, raw: bytes, rows: int, codecs: list[dict]
-    ) -> np.ndarray | list:
+    ) -> np.ndarray | pa.Array:
         buf = raw
         # bytes->bytes codecs run last on encode, so undo them first
         array_codec: dict | None = None
@@ -303,11 +391,8 @@ class ZarrArrayMeta:
         if array_codec is None:
             raise ZarrError(f"array {self.path} has no array->bytes codec")
         cname = array_codec["name"]
-        if cname == "vlen-utf8":
-            vals = [b.decode("utf-8") for b in _decode_vlen(bytes(buf))]
-            return vals[:rows]
-        if cname == "vlen-bytes":
-            return list(_decode_vlen(bytes(buf)))[:rows]
+        if cname in ("vlen-utf8", "vlen-bytes"):
+            return _decode_vlen(buf, binary=self.dtype.kind == "bytes")[:rows]
         # fixed-width "bytes" codec
         endian = (array_codec.get("configuration") or {}).get("endian", "little")
         np_dt = self.dtype.numpy_dtype()
@@ -316,7 +401,7 @@ class ZarrArrayMeta:
         arr = np.frombuffer(bytes(buf), dtype=np_dt)
         return arr[:rows]
 
-    def _decode_shard(self, raw: bytes, rows: int, cfg: dict) -> np.ndarray | list:
+    def _decode_shard(self, raw: bytes, rows: int, cfg: dict) -> np.ndarray | pa.Array:
         """Decode a sharding_indexed shard: inner chunks packed into one
         object with an (offset, nbytes) uint64 index at the start or end.
 
@@ -369,17 +454,20 @@ class ZarrArrayMeta:
                 vals = self._decode_pipeline(seg, take, inner_codecs)
                 pieces.append(vals[:take])
             produced += take
+        return self._concat(pieces)
+
+    def _concat(self, pieces: list) -> np.ndarray | pa.Array:
+        if len(pieces) == 1:
+            return pieces[0]
         if self.dtype.is_variable:
-            out: list = []
-            for p in pieces:
-                out.extend(p)
-            return out
-        return pieces[0] if len(pieces) == 1 else np.concatenate(pieces)
+            return pa.concat_arrays(pieces)
+        return np.concatenate(pieces)
 
     def _fill(self, rows: int):
         if self.dtype.is_variable:
             fv = self.fill_value if self.fill_value is not None else ""
-            return [fv] * rows
+            vlen_type = pa.binary() if self.dtype.kind == "bytes" else pa.string()
+            return pa.array([fv] * rows, type=vlen_type)
         np_dt = self.dtype.numpy_dtype()
         fv = self.fill_value
         if fv is None:
@@ -389,10 +477,26 @@ class ZarrArrayMeta:
     # -- range read ---------------------------------------------------------
 
     def read_range(self, start: int, stop: int) -> np.ndarray | list:
-        """Read logical rows [start, stop) across covering chunks."""
+        """Read logical rows [start, stop) across covering chunks: a numpy
+        array, or a list of ``str``/``bytes`` for variable-length dtypes."""
+        if not self.dtype.is_variable:
+            return self.read_values(start, stop)
+        out: list = []
+        for piece in self._pieces(start, stop):
+            out.extend(piece.to_numpy(zero_copy_only=False).tolist())
+        return out
+
+    def read_values(self, start: int, stop: int) -> np.ndarray | pa.Array:
+        """Like :meth:`read_range`, but variable-length dtypes come back as
+        the decoder's Arrow string/binary array."""
+        pieces = self._pieces(start, stop)
+        return self._concat(pieces) if pieces else self._fill(0)
+
+    def _pieces(self, start: int, stop: int) -> list:
+        """Decoded slices of the chunks covering rows [start, stop)."""
         stop = min(stop, self.n_rows)
         if stop <= start:
-            return [] if self.dtype.is_variable else np.empty(0, self.dtype.numpy_dtype())
+            return []
         crows = self.chunk_rows
         first, last = start // crows, (stop - 1) // crows
         pieces: list = []
@@ -408,12 +512,7 @@ class ZarrArrayMeta:
             lo = max(start, c_start) - c_start
             hi = min(stop, c_start + c_len) - c_start
             pieces.append(vals[lo:hi])
-        if self.dtype.is_variable:
-            out: list = []
-            for p in pieces:
-                out.extend(p)
-            return out
-        return pieces[0] if len(pieces) == 1 else np.concatenate(pieces)
+        return pieces
 
 
 def normalize_store_path(path: str) -> str:
