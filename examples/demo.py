@@ -42,10 +42,10 @@ def main() -> None:
           t.to_df(spark).filter("id >= 9000").count())
 
     # 3. sharded store (the very-large-store layout) -------------------------
-    zarrv3.write_sharded_group(
+    zarrv3.write_group(
         f"{work}/sharded.zarr", "g",
         {"x": np.arange(5000, dtype=np.int64)},
-        shard_rows=1024, inner_rows=128,
+        chunk_rows=1024, inner_rows=128,
     )
     print("== sharding_indexed scan ==")
     print("sum:", ZarrTable(f"{work}/sharded.zarr", "g").to_df(spark)

@@ -1,6 +1,6 @@
 """Property-based tests (hypothesis) for the pure-Python Zarr v3 codec
 stack: arbitrary values x dtypes x chunk geometries x slices round-trip
-exactly through write_group / write_sharded_group -> open_array ->
+exactly through write_group (plain and sharded) -> open_array ->
 read_range. No Spark involved — these hammer the byte-level edge cases
 (partial last chunk, single-row chunks, empty slices, NaN, dtype extremes,
 unicode) that example tests tend to miss."""
@@ -144,8 +144,8 @@ def test_roundtrip_sharded(data, tmp_path_factory):
     shard = inner * mult
     arr = _values(data.draw, dt, n)
     store = str(tmp_path_factory.mktemp("prop") / "s.zarr")
-    zarrv3.write_sharded_group(
-        store, "/g", {"x": arr}, shard_rows=shard, inner_rows=inner
+    zarrv3.write_group(
+        store, "/g", {"x": arr}, chunk_rows=shard, inner_rows=inner
     )
     meta = zarrv3.open_array(store, "/g/x")
     _assert_equal(dt, meta.read_range(0, n), arr)
@@ -307,7 +307,7 @@ def test_vlen_sharded_inner_chunks(data, tmp_path_factory):
     shard = inner * data.draw(st.integers(min_value=1, max_value=4), label="mult")
     items = data.draw(st.lists(TEXT, min_size=n, max_size=n), label="items")
     store = str(tmp_path_factory.mktemp("vshard") / "s.zarr")
-    zarrv3.write_sharded_group(store, "/g", {"s": items}, shard_rows=shard, inner_rows=inner)
+    zarrv3.write_group(store, "/g", {"s": items}, chunk_rows=shard, inner_rows=inner)
     hole = data.draw(st.integers(min_value=0, max_value=(n - 1) // inner), label="hole")
     si, ii = divmod(hole, shard // inner)
     path = f"{store}/g/s/c/{si}"

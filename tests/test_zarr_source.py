@@ -283,11 +283,11 @@ def test_sharded_store_roundtrip(spark, tmp_path):
     uint64 index — the object-count-friendly layout for 100 TB stores."""
     store = str(tmp_path / "sharded.zarr")
     n = 10_000
-    zarrv3.write_sharded_group(
+    zarrv3.write_group(
         store, "g",
         {"x": np.arange(n, dtype=np.int64),
          "s": [f"v{i:05d}" for i in range(n)]},
-        shard_rows=2048, inner_rows=256,
+        chunk_rows=2048, inner_rows=256,
     )
     meta = zarrv3.open_array(store, "g/x")
     assert meta.sharding is not None
@@ -308,9 +308,9 @@ def test_sharded_store_roundtrip(spark, tmp_path):
 
 def test_sharded_missing_inner_chunk_fills(tmp_path):
     store = str(tmp_path / "shardfill.zarr")
-    zarrv3.write_sharded_group(
+    zarrv3.write_group(
         store, "g", {"x": np.arange(1000, dtype=np.int64)},
-        shard_rows=512, inner_rows=128,
+        chunk_rows=512, inner_rows=128,
     )
     # corrupt: mark inner chunk 1 of shard 0 as missing in the index
     p = f"{store}/g/x/c/0"
@@ -439,9 +439,9 @@ def test_shard_index_crc32c_verified(tmp_path):
     import struct as st
 
     store = str(tmp_path / "shardcrc.zarr")
-    zarrv3.write_sharded_group(
+    zarrv3.write_group(
         store, "g", {"x": np.arange(1000, dtype=np.int64)},
-        shard_rows=512, inner_rows=128,
+        chunk_rows=512, inner_rows=128,
     )
     # retrofit a crc32c index checksum onto shard 0
     meta_path = f"{store}/g/x/zarr.json"

@@ -82,14 +82,14 @@ def _sharded_store() -> str:
         from zarr_datafusion_search_spark.sources import zarrv3
 
         n = 1000
-        zarrv3.write_sharded_group(
+        zarrv3.write_group(
             SHARDED_FIXTURE_STORE,
             "meta",
             {
                 "idx": np.arange(n, dtype=np.int64),
                 "collection": [f"collection_{chr(97 + i % 4)}" for i in range(n)],
             },
-            shard_rows=256,
+            chunk_rows=256,
             inner_rows=64,
         )
     return SHARDED_FIXTURE_STORE

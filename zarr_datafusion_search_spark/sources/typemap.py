@@ -15,10 +15,14 @@ Reimplements the reference's ``zarr_to_arrow_field`` semantics
   ``bbox`` is an error (src/schema.rs:68-73). Dispatch is by column name, as
   in the reference.
 - Every field is non-nullable (src/schema.rs:64,124).
+
+The inverse, :func:`spark_to_zarr_spec`, is what every writer uses to map a
+Spark column onto a Zarr array (timestamps are stored as ``us`` ticks).
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import types as T
 
@@ -74,6 +78,36 @@ def zarr_to_spark_field(name: str, dtype: ZarrDType) -> T.StructField:
     else:
         raise ZarrError(f"unsupported Zarr dtype: {dtype}")
     return T.StructField(name, spark_type, nullable=False, metadata=metadata)
+
+
+# Spark type -> numpy dtype of the Zarr array a writer creates for it
+_SPARK_NUMPY: dict[type, str] = {
+    T.BooleanType: "|b1",
+    T.ByteType: "|i1",
+    T.ShortType: "<i2",
+    T.IntegerType: "<i4",
+    T.LongType: "<i8",
+    T.FloatType: "<f4",
+    T.DoubleType: "<f8",
+}
+
+
+def spark_to_zarr_spec(field: T.StructField) -> dict:
+    """One Spark field -> the array spec the writers take
+    (``is_string``/``np_dtype``/``datetime_unit``, as accepted by
+    :func:`zarrv3.write_array_metadata`), or raise for unwritable types."""
+    dt = field.dataType
+    if isinstance(dt, T.StringType):
+        return {"is_string": True}
+    if isinstance(dt, (T.TimestampNTZType, T.TimestampType)):
+        return {"is_string": False, "datetime_unit": "us", "np_dtype": np.dtype("<i8")}
+    for spark_t, np_t in _SPARK_NUMPY.items():
+        if isinstance(dt, spark_t):
+            return {"is_string": False, "np_dtype": np.dtype(np_t)}
+    raise ValueError(
+        f"cannot write Spark type {dt.simpleString()} to zarr (column "
+        f"{field.name}); supported: numeric, string, boolean, timestamp"
+    )
 
 
 def zarr_to_arrow_type(dtype: ZarrDType) -> pa.DataType:

@@ -54,12 +54,12 @@ from pyspark.sql.datasource import (
     StringStartsWith,
     WriterCommitMessage,
 )
-from pyspark.sql import types as T
 from pyspark.sql.types import StructType
 
 from zarr_datafusion_search_spark.sources import zarrv3
 from zarr_datafusion_search_spark.sources.typemap import (
     group_schema,
+    spark_to_zarr_spec,
     zarr_to_arrow_type,
 )
 
@@ -472,9 +472,9 @@ class ZarrWriter(DataSourceArrowWriter):
 
     Zarr's regular chunk grid is why: a chunk's file name is its global row
     position / chunk_rows, unknowable per-task without a global row index.
-    The scale path (not yet built) assigns global row ids (per-partition
-    count + offset pass), repartitions on chunk id, and lets each task write
-    whole chunks directly — turning phase 2 into a metadata-only commit.
+    The scale path is :mod:`zarr_sink` (``write_zarr_distributed``): it
+    assigns global row ids, shuffles on chunk id and lets each task write
+    whole chunks, so its commit is metadata-only.
     """
 
     def __init__(
@@ -494,7 +494,7 @@ class ZarrWriter(DataSourceArrowWriter):
         self._zstd_level = zstd_level
         self._staging = os.path.join(path, ".staging")
         for field in schema.fields:
-            self._col_spec(field)  # validate types eagerly (driver-side)
+            spark_to_zarr_spec(field)  # validate types eagerly (driver-side)
         # Spark's Python data sources expose only Append/Overwrite save
         # modes. This writer treats "append" as create-new-store and errors
         # when one exists; true row append (boundary-chunk merge) lives in
@@ -505,33 +505,6 @@ class ZarrWriter(DataSourceArrowWriter):
                 f"zarr store already exists at {path}; use mode('overwrite') "
                 "to replace it, or append_zarr_distributed() to add rows"
             )
-
-    @staticmethod
-    def _col_spec(field) -> dict:
-        """StructField -> ChunkedArrayWriter kwargs (or raise)."""
-        import numpy as np
-
-        dt = field.dataType
-        if isinstance(dt, T.StringType):
-            return {"is_string": True}
-        if isinstance(dt, (T.TimestampNTZType, T.TimestampType)):
-            return {"is_string": False, "datetime_unit": "us", "np_dtype": np.dtype("<i8")}
-        numeric = {
-            T.BooleanType: "|b1",
-            T.ByteType: "|i1",
-            T.ShortType: "<i2",
-            T.IntegerType: "<i4",
-            T.LongType: "<i8",
-            T.FloatType: "<f4",
-            T.DoubleType: "<f8",
-        }
-        for spark_t, np_t in numeric.items():
-            if isinstance(dt, spark_t):
-                return {"is_string": False, "np_dtype": np.dtype(np_t)}
-        raise ValueError(
-            f"cannot write Spark type {dt.simpleString()} to zarr (column "
-            f"{field.name}); supported: numeric, string, boolean, timestamp"
-        )
 
     def write(self, iterator) -> ZarrCommitMessage:
         import pyarrow as pa
@@ -574,7 +547,7 @@ class ZarrWriter(DataSourceArrowWriter):
                 f.name,
                 chunk_rows=self._chunk_rows,
                 zstd_level=self._zstd_level,
-                **self._col_spec(f),
+                **spark_to_zarr_spec(f),
             )
             for f in self._schema.fields
         }

@@ -1,26 +1,32 @@
 """Distributed (task-side) Zarr sink — the scale path for writing.
 
-The ``zdss_zarr`` format writer (``zarr_datasource.ZarrWriter``) stages Arrow
+The ``zarr`` format writer (``zarr_datasource.ZarrWriter``) stages Arrow
 files per task and assembles chunks serially on the driver: correct, but
 throughput is driver-bound. This module implements the documented scale
 shape (reference is read-only — the whole sink is a beyond-parity
-extension):
+extension). A fresh write and an append are one job, :func:`_write_rows`,
+that adds rows to a store at row ``start``: a fresh write lays down an
+empty store in the requested layout and runs the job at ``start=0``; an
+append runs it at ``start=`` the store's row count.
 
 1. **global row ids** — ``monotonically_increasing_id`` decomposes into
    (partition id, within-partition offset); one metadata-light pass counts
    rows per partition, a broadcast offset map turns the pair into a global
-   contiguous row id. The input is persisted for the duration of the write
-   so both passes see the same partition layout.
+   contiguous row id from ``start``. The input is persisted for the
+   duration of the write so both passes see the same partition layout.
 2. **repartition on chunk id** — ``row_id // chunk_rows``; a single hash
    shuffle groups every row of a chunk into one task.
 3. **task-side chunk writes** — ``applyInPandas`` per chunk id: each group
    IS one complete chunk; the task sorts it by row id, encodes every column
    with the same codec stack as the streaming writer
    (:func:`zarrv3.encode_chunk_payload`), writes the chunk files, and
-   returns one metadata row (chunk id, rows, per-column min/max).
+   returns one metadata row (chunk id, rows, per-column min/max). When
+   ``start`` is not chunk-aligned, the task owning the boundary chunk
+   first reads the store's trailing partial rows and prepends them.
 4. **metadata-only commit** — the driver verifies chunk coverage from the
-   returned rows (n_chunks rows, not data) and writes each array's
-   ``zarr.json`` with the assembled chunk stats.
+   returned rows (n_chunks rows, not data), stages each array's
+   ``zarr.json`` with the assembled chunk stats as ``zarr.json.pending``,
+   and flips them all with renames.
 
 Nulls: the Zarr table model is non-nullable (every chunk is a dense typed
 buffer). Null-bearing columns fail loudly task-side unless ``null_fill``
@@ -34,6 +40,9 @@ import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from zarr_datafusion_search_spark.sources import zarrv3
+from zarr_datafusion_search_spark.sources.typemap import spark_to_zarr_spec
 
 #: monotonically_increasing_id() = partition_id << 33 | within-partition seq.
 _MONO_PART_SHIFT = 33
@@ -71,7 +80,7 @@ def _series_to_vals(s, spec: dict, name: str, cid: int, null_fill: dict):
 
 
 def _assign_row_ids(df: DataFrame, chunk_rows: int, start: int):
-    """Phase 1 of both distributed writers: global contiguous row ids
+    """Phase 1 of the write job: global contiguous row ids
     from ``start`` via monotonically_increasing_id decomposition + a
     broadcast per-partition offset map. Returns ``(rows, n_new)`` where
     ``rows`` carries ``_row_id``/``_chunk_id``. The caller must have the
@@ -151,138 +160,20 @@ def write_zarr_distributed(
     compressed ``inner_rows`` chunks plus a crc32c-checksummed index — the
     object-count-friendly layout for 100 TB stores (same read granularity,
     ~chunk_rows/inner_rows fewer objects)."""
-    import numpy as np
-
-    from zarr_datafusion_search_spark.sources import zarrv3
-    from zarr_datafusion_search_spark.sources.zarr_datasource import ZarrWriter
-
     if inner_rows is not None and chunk_rows % inner_rows != 0:
         raise ValueError("chunk_rows (shard size) must be a multiple of inner_rows")
-    schema = df.schema
-    col_specs = {f.name: ZarrWriter._col_spec(f) for f in schema.fields}
-    null_fill = dict(null_fill or {})
-    for c in null_fill:
-        if c not in col_specs:
-            raise KeyError(f"null_fill column {c!r} not in DataFrame")
-
-    if os.path.exists(os.path.join(path, "zarr.json")):
-        if not overwrite:
-            raise ValueError(
-                f"zarr store already exists at {path}; pass overwrite=True "
-                "to replace it, or use append_zarr_distributed() to add rows"
-            )
-        import shutil
-
-        shutil.rmtree(path)
-
-    # ---- phase 1: global row ids -------------------------------------
-    df = df.persist()
-    try:
-        rows, total = _assign_row_ids(df, chunk_rows, start=0)
-        n_chunks = max(1, -(-total // chunk_rows))
-
-        # ---- driver: store/group skeleton (metadata only) ------------
-        group_dir = zarrv3.init_group(path, group_path)
-        for f in schema.fields:
-            os.makedirs(os.path.join(group_dir, f.name, "c"), exist_ok=True)
-
-        # ---- phase 2+3: shuffle on chunk id, task-side chunk writes --
-        names = [f.name for f in schema.fields]
-        specs = col_specs
-        last_chunk = n_chunks - 1
-        last_rows = total - last_chunk * chunk_rows
-
-        def write_chunk(pdf):
-            import pandas as pd
-
-            cid = int(pdf["_chunk_id"].iloc[0])
-            pdf = pdf.sort_values("_row_id")
-            row_ids = pdf["_row_id"].to_numpy()
-            expect = last_rows if cid == last_chunk else chunk_rows
-            if len(pdf) != expect or row_ids[0] != cid * chunk_rows or (
-                len(row_ids) > 1 and (np.diff(row_ids) != 1).any()
-            ):
-                raise ValueError(
-                    f"chunk {cid}: non-contiguous row ids "
-                    f"[{row_ids[0]}..{row_ids[-1]}], n={len(pdf)}, "
-                    f"expected {expect} from {cid * chunk_rows}"
-                )
-            # pad EVERY partial chunk to the full chunk_shape, including a
-            # single-chunk store: with clamp_chunk=False the metadata says
-            # chunk_shape=chunk_rows, and zarr v3 requires edge chunks to
-            # be full-size fill-padded — strict readers (e.g. the zarrs
-            # crate the reference builds on) fail decode on short buffers
-            pad = chunk_rows - expect if expect < chunk_rows else 0
-            stats = {}
-            for name in names:
-                spec = specs[name]
-                vals = _series_to_vals(pdf[name], spec, name, cid, null_fill)
-                lo, hi = zarrv3.chunk_stats(vals, spec["is_string"])
-                stats[name] = [lo, hi]
-                if inner_rows is not None:
-                    payload = zarrv3.encode_shard_payload(
-                        vals,
-                        spec["is_string"],
-                        inner_rows,
-                        chunk_rows,
-                        zstd_level,
-                        index_crc32c=True,
-                    )
-                else:
-                    payload = zarrv3.encode_chunk_payload(
-                        vals, spec["is_string"], pad, zstd_level
-                    )
-                _write_chunk_file(group_dir, name, cid, payload)
-            return pd.DataFrame(
-                {"chunk_id": [cid], "n": [expect], "stats": [json.dumps(stats)]}
-            )
-
-        done = (
-            rows.groupBy("_chunk_id")
-            .applyInPandas(write_chunk, "chunk_id long, n long, stats string")
-            .collect()
-        )
-    finally:
-        df.unpersist()
-
-    # ---- phase 4: metadata-only commit -------------------------------
-    got = {r.chunk_id: r for r in done}
-    missing = [c for c in range(n_chunks) if c not in got] if total else []
-    if missing or len(got) != (n_chunks if total else 0):
-        raise ValueError(
-            f"chunk coverage mismatch: expected {n_chunks}, got "
-            f"{sorted(got)}; missing {missing}"
-        )
-    written = sum(r.n for r in got.values())
-    if written != total:
-        raise ValueError(f"row count mismatch: wrote {written}, expected {total}")
-    for f in schema.fields:
-        if total:
-            per_chunk = [json.loads(got[c].stats)[f.name] for c in range(n_chunks)]
-            stat_min = [s[0] for s in per_chunk]
-            stat_max = [s[1] for s in per_chunk]
-        else:
-            stat_min, stat_max = [], []
-        zarrv3.write_array_metadata(
-            os.path.join(group_dir, f.name),
-            n_rows=total,
-            chunk_rows=chunk_rows,
-            is_string=col_specs[f.name]["is_string"],
-            np_dtype=col_specs[f.name].get("np_dtype"),
-            datetime_unit=col_specs[f.name].get("datetime_unit"),
-            zstd_level=zstd_level,
-            stat_min=stat_min,
-            stat_max=stat_max,
-            inner_rows=inner_rows,
-            index_crc32c=inner_rows is not None,
-            # this writer's physical layout keeps the requested chunk grid
-            # (one unpadded partial chunk when total < chunk_rows), so the
-            # metadata must NOT clamp chunk_shape to the row count — a store
-            # created from a small first batch keeps its intended chunking
-            # for later appends
-            clamp_chunk=False,
-        )
-    return total
+    return _write_rows(
+        df,
+        path,
+        group_path,
+        null_fill,
+        create={
+            "chunk_rows": chunk_rows,
+            "inner_rows": inner_rows,
+            "zstd_level": zstd_level,
+            "overwrite": overwrite,
+        },
+    )
 
 
 def compact_zarr_stores(
@@ -333,108 +224,121 @@ def append_zarr_distributed(
     I/O, and a landing zone wants it: only the boundary chunk (the
     existing store's final, possibly partial, chunk) must be rewritten;
     every other existing chunk's bytes are untouched. The plan is the
-    distributed writer's (global row ids offset by the existing row
-    count, one shuffle on chunk id, executors write whole chunks,
-    metadata-only commit) with one twist: the task that owns the boundary
-    chunk reads the store's trailing partial rows through the chunk
-    reader, prepends them to its new rows, and writes the merged chunk.
-    The commit extends shape and per-chunk stats; a failed job leaves the
-    old ``zarr.json`` (and therefore the old logical table) fully intact,
-    because data files for chunks >= the boundary are not referenced
-    until the metadata flips.
+    distributed writer's job run from the existing row count: the task
+    that owns the boundary chunk reads the store's trailing partial rows
+    through the chunk reader, prepends them to its new rows, and writes
+    the merged chunk. The commit extends shape and per-chunk stats; a
+    failed job leaves the old ``zarr.json`` (and therefore the old logical
+    table) fully intact, because data files for chunks >= the boundary are
+    not referenced until the metadata flips.
 
     Schema must match the store (same column names; Spark types mapping
     to each array's exact zarr dtype). ``zstd_level``/shard layout are
     inherited from the store (``zstd_level`` overrides if given).
     """
+    return _write_rows(df, path, group_path, null_fill, zstd_level=zstd_level)
+
+
+def _create_store(
+    path: str,
+    group_path: str,
+    specs: dict,
+    chunk_rows: int,
+    inner_rows: int | None,
+    zstd_level: int,
+    overwrite: bool,
+) -> None:
+    """Lay down an empty store: the group skeleton plus 0-row metadata for
+    every array in the requested layout (the fresh write appends to it)."""
+    if os.path.exists(os.path.join(path, "zarr.json")):
+        if not overwrite:
+            raise ValueError(
+                f"zarr store already exists at {path}; pass overwrite=True "
+                "to replace it, or use append_zarr_distributed() to add rows"
+            )
+        import shutil
+
+        shutil.rmtree(path)
+    group_dir = zarrv3.init_group(path, group_path)
+    for name, spec in specs.items():
+        arr_dir = os.path.join(group_dir, name)
+        os.makedirs(os.path.join(arr_dir, "c"), exist_ok=True)
+        # this layout keeps the requested chunk grid (every partial chunk
+        # is padded to full size), so the metadata must NOT clamp
+        # chunk_shape to the row count — a store created from a small
+        # first batch keeps its intended chunking for later appends
+        zarrv3.write_array_metadata(
+            arr_dir,
+            n_rows=0,
+            chunk_rows=chunk_rows,
+            zstd_level=zstd_level,
+            inner_rows=inner_rows,
+            index_crc32c=inner_rows is not None,
+            clamp_chunk=False,
+            **spec,
+        )
+
+
+def _write_rows(
+    df: DataFrame,
+    path: str,
+    group_path: str,
+    null_fill: dict | None,
+    zstd_level: int | None = None,
+    create: dict | None = None,
+) -> int:
+    """The one distributed write job: add ``df``'s rows to the store at
+    ``path`` after its existing rows, in the store's own layout; returns
+    the new row count. ``create`` (the keyword arguments of
+    :func:`_create_store` after ``specs``) first lays down a new empty
+    store, so a fresh write is this job at row 0."""
     import numpy as np
 
-    from zarr_datafusion_search_spark.sources import zarrv3
-    from zarr_datafusion_search_spark.sources.zarr_datasource import ZarrWriter
+    path = zarrv3.normalize_store_path(path)
+    specs = {f.name: spark_to_zarr_spec(f) for f in df.schema.fields}
+    null_fill = dict(null_fill or {})
+    for c in null_fill:
+        if c not in specs:
+            raise KeyError(f"null_fill column {c!r} not in DataFrame")
+    if create is not None:
+        _create_store(path, group_path, specs, **create)
 
     group = zarrv3.open_group(path, group_path)
-    if not group.arrays:
-        raise ValueError(f"no arrays in zarr group {path}{group_path}")
     names = sorted(group.arrays)
-    if sorted(df.columns) != names:
+    if sorted(specs) != names:
         raise ValueError(
             f"append schema mismatch: store has {names}, DataFrame has "
-            f"{sorted(df.columns)}"
+            f"{sorted(specs)}"
         )
-    schema = df.schema
-    specs = {f.name: ZarrWriter._col_spec(f) for f in schema.fields}
-    null_fill = dict(null_fill or {})
-
-    # dtype compatibility: the spec must regenerate the array's data_type
-    for name in names:
-        meta = group.arrays[name]
-        spec = specs[name]
-        if spec["is_string"]:
-            expected = "string"
-        elif spec.get("datetime_unit"):
-            expected = zarrv3.dtype_to_json(
-                zarrv3.ZarrDType("datetime64", unit=spec["datetime_unit"])
-            )
-        else:
-            expected = zarrv3.dtype_to_json(
-                zarrv3._numpy_to_zarr_dtype(np.empty(0, spec["np_dtype"]))
-            )
-        actual = zarrv3.dtype_to_json(meta.dtype)
-        if expected != actual:
-            raise ValueError(
-                f"append dtype mismatch on {name!r}: store is {actual}, "
-                f"DataFrame maps to {expected}"
-            )
-
     meta0 = group.arrays[names[0]]
-    chunk_rows = meta0.chunk_rows
-    old_total = meta0.n_rows
+    chunk_rows, start = meta0.chunk_rows, meta0.n_rows
     for name in names:
-        m = group.arrays[name]
-        if m.n_rows != old_total or m.chunk_rows != chunk_rows:
+        meta, want = group.arrays[name], zarrv3.spec_dtype(**specs[name])
+        if meta.dtype != want:
+            raise ValueError(
+                f"append dtype mismatch on {name!r}: store is "
+                f"{zarrv3.dtype_to_json(meta.dtype)}, DataFrame maps to "
+                f"{zarrv3.dtype_to_json(want)}"
+            )
+        if meta.n_rows != start or meta.chunk_rows != chunk_rows:
             raise ValueError(
                 f"array {name!r} disagrees on shape/chunking "
-                f"({m.n_rows}x{m.chunk_rows} vs {old_total}x{chunk_rows})"
+                f"({meta.n_rows}x{meta.chunk_rows} vs {start}x{chunk_rows})"
             )
-    sharding = meta0.sharding
-    inner_rows = sharding["chunk_shape"][0] if sharding else None
-    index_crc32c = bool(sharding) and any(
-        c.get("name") == "crc32c" for c in (sharding.get("index_codecs") or [])
-    )
+    inner_rows, index_crc32c = meta0.inner_rows, meta0.index_crc32c
     if zstd_level is None:
-        chain = (sharding or {}).get("codecs") or meta0.codecs
-        zstd_level = next(
-            (
-                (c.get("configuration") or {}).get("level", 0)
-                for c in chain
-                if c.get("name") == "zstd"
-            ),
-            0,
-        )
-
+        zstd_level = meta0.zstd_level
     group_rel = group_path.strip("/")
-    group_dir = (
-        os.path.join(zarrv3.normalize_store_path(path), group_rel)
-        if group_rel
-        else zarrv3.normalize_store_path(path)
-    )
-    boundary = old_total // chunk_rows
-    partial = old_total % chunk_rows
+    group_dir = os.path.join(path, group_rel) if group_rel else path
+    first = start // chunk_rows  # the boundary chunk: the first one written
 
-    # ---- phase 1: global row ids, offset by the existing row count ----
     df = df.persist()
     try:
-        rows, n_new = _assign_row_ids(df, chunk_rows, start=old_total)
+        rows, n_new = _assign_row_ids(df, chunk_rows, start)
         if n_new == 0:
-            return old_total
-        new_total = old_total + n_new
-        n_chunks_new = -(-new_total // chunk_rows)
-        last_chunk = n_chunks_new - 1
-        store_path = path
-        _specs = specs
-        _names = names
-        _nf = null_fill
-        _gp = group_path
+            return start
+        total = start + n_new
+        n_chunks = -(-total // chunk_rows)
 
         def write_chunk(pdf):
             import pandas as pd
@@ -442,59 +346,46 @@ def append_zarr_distributed(
             cid = int(pdf["_chunk_id"].iloc[0])
             pdf = pdf.sort_values("_row_id")
             row_ids = pdf["_row_id"].to_numpy()
-            start_new = max(cid * chunk_rows, old_total)
-            stop = min((cid + 1) * chunk_rows, new_total)
-            expect_new = stop - start_new
-            if len(pdf) != expect_new or row_ids[0] != start_new or (
-                len(row_ids) > 1 and (np.diff(row_ids) != 1).any()
-            ):
+            lo = cid * chunk_rows  # first row of the chunk
+            new_lo = max(lo, start)  # first row this job adds to it
+            hi = min(lo + chunk_rows, total)
+            if len(pdf) != hi - new_lo or row_ids[0] != new_lo or (np.diff(row_ids) != 1).any():
                 raise ValueError(
-                    f"append chunk {cid}: non-contiguous row ids "
+                    f"chunk {cid}: non-contiguous row ids "
                     f"[{row_ids[0]}..{row_ids[-1]}], n={len(pdf)}, "
-                    f"expected {expect_new} from {start_new}"
+                    f"expected {hi - new_lo} from {new_lo}"
                 )
-            n_vals = stop - cid * chunk_rows
-            # full-size fill-padding for ANY partial chunk (see the batch
-            # writer): zarr v3 interop requires it even for 1-chunk stores
-            pad = chunk_rows - n_vals if n_vals < chunk_rows else 0
-            prev = None
-            if cid == boundary and partial:
-                # merge the store's trailing partial rows (bounded: < one
-                # chunk), read through the ordinary chunk reader
-                g = zarrv3.open_group(store_path, _gp)
-                prev = {
-                    n: g.arrays[n].read_range(cid * chunk_rows, old_total)
-                    for n in _names
-                }
+            # the boundary chunk of an unaligned start merges the store's
+            # trailing partial rows (bounded: < one chunk), read through the
+            # ordinary chunk reader
+            old = zarrv3.open_group(path, group_path).arrays if new_lo > lo else None
+            # pad EVERY partial chunk to the full chunk_shape, including a
+            # single-chunk store: the metadata says chunk_shape=chunk_rows,
+            # and zarr v3 requires edge chunks to be full-size fill-padded —
+            # strict readers (e.g. the zarrs crate the reference builds on)
+            # fail decode on short buffers
+            pad = chunk_rows - (hi - lo)
             stats = {}
-            for name in _names:
-                spec = _specs[name]
-                vals = _series_to_vals(pdf[name], spec, name, cid, _nf)
-                if prev is not None:
-                    old_vals = prev[name]
+            for name in names:
+                spec = specs[name]
+                vals = _series_to_vals(pdf[name], spec, name, cid, null_fill)
+                if old is not None:
+                    prev = old[name].read_range(lo, new_lo)
                     if spec["is_string"]:
-                        vals = list(old_vals) + vals
-                    elif spec.get("datetime_unit"):
-                        vals = np.concatenate(
-                            [
-                                np.asarray(old_vals)
-                                .astype("datetime64[us]")
-                                .astype("<i8"),
-                                vals,
-                            ]
-                        )
+                        vals = prev + vals
                     else:
-                        vals = np.concatenate(
-                            [np.asarray(old_vals).astype(spec["np_dtype"]), vals]
-                        )
-                if len(vals) != n_vals:
+                        vals = np.concatenate([np.asarray(prev).astype(spec["np_dtype"]), vals])
+                if len(vals) != hi - lo:
                     raise ValueError(
-                        f"append chunk {cid} column {name!r}: merged "
-                        f"{len(vals)} values, expected {n_vals}"
+                        f"chunk {cid} column {name!r}: merged {len(vals)} "
+                        f"values, expected {hi - lo}"
                     )
-                lo, hi = zarrv3.chunk_stats(vals, spec["is_string"])
-                stats[name] = [lo, hi]
-                if inner_rows is not None:
+                stats[name] = zarrv3.chunk_stats(vals, spec["is_string"])
+                if inner_rows is None:
+                    payload = zarrv3.encode_chunk_payload(
+                        vals, spec["is_string"], pad, zstd_level
+                    )
+                else:
                     payload = zarrv3.encode_shard_payload(
                         vals,
                         spec["is_string"],
@@ -503,17 +394,9 @@ def append_zarr_distributed(
                         zstd_level,
                         index_crc32c=index_crc32c,
                     )
-                else:
-                    payload = zarrv3.encode_chunk_payload(
-                        vals, spec["is_string"], pad, zstd_level
-                    )
                 _write_chunk_file(group_dir, name, cid, payload)
             return pd.DataFrame(
-                {
-                    "chunk_id": [cid],
-                    "n": [n_vals],
-                    "stats": [json.dumps(stats)],
-                }
+                {"chunk_id": [cid], "n": [hi - lo], "stats": [json.dumps(stats)]}
             )
 
         done = (
@@ -526,40 +409,32 @@ def append_zarr_distributed(
 
     # ---- metadata-only commit: extend shape + chunk stats -------------
     got = {r.chunk_id: r for r in done}
-    expected_cids = list(range(boundary if partial else old_total // chunk_rows,
-                               n_chunks_new))
-    # chunks fully covered by old data are never touched
-    expected_cids = [c for c in expected_cids if (c + 1) * chunk_rows > old_total]
-    missing = [c for c in expected_cids if c not in got]
-    if missing or set(got) != set(expected_cids):
+    if sorted(got) != list(range(first, n_chunks)):
         raise ValueError(
-            f"append chunk coverage mismatch: expected {expected_cids}, "
+            f"chunk coverage mismatch: expected chunks {first}..{n_chunks - 1}, "
             f"got {sorted(got)}"
         )
     written = sum(r.n for r in got.values())
-    expected_written = new_total - (boundary if partial else old_total // chunk_rows) * chunk_rows
-    if written != expected_written:
+    if written != total - first * chunk_rows:
         raise ValueError(
-            f"append row count mismatch: wrote {written}, expected "
-            f"{expected_written}"
+            f"row count mismatch: wrote {written}, expected "
+            f"{total - first * chunk_rows}"
         )
-    for name in _names:
-        meta = group.arrays[name]
-        old_stats = meta.chunk_stats
-        keep = boundary  # chunks [0, boundary) keep their stats verbatim
-        if old_stats and len(old_stats.get("min", [])) >= keep:
-            stat_min = list(old_stats["min"][:keep])
-            stat_max = list(old_stats["max"][:keep])
-        elif keep == 0:
+    for name in names:
+        old_stats = group.arrays[name].chunk_stats
+        # chunks [0, first) keep their stats verbatim
+        if first == 0:
             stat_min, stat_max = [], []
+        elif old_stats and len(old_stats.get("min", [])) >= first:
+            stat_min = list(old_stats["min"][:first])
+            stat_max = list(old_stats["max"][:first])
         else:
             stat_min = stat_max = None  # old store had no stats: drop them
         if stat_min is not None:
-            for c in range(keep, n_chunks_new):
-                s = json.loads(got[c].stats)[name]
-                stat_min.append(s[0])
-                stat_max.append(s[1])
-        spec = specs[name]
+            for c in range(first, n_chunks):
+                lo, hi = json.loads(got[c].stats)[name]
+                stat_min.append(lo)
+                stat_max.append(hi)
         # stage: all arrays' new metadata lands as .pending first, then a
         # bare-rename loop flips them — shrinking the multi-array commit
         # window from N encode+write cycles to N atomic renames, so a
@@ -567,11 +442,8 @@ def append_zarr_distributed(
         # smallest possible chance of seeing disagreeing shapes
         zarrv3.write_array_metadata(
             os.path.join(group_dir, name),
-            n_rows=new_total,
+            n_rows=total,
             chunk_rows=chunk_rows,
-            is_string=spec["is_string"],
-            np_dtype=spec.get("np_dtype"),
-            datetime_unit=spec.get("datetime_unit"),
             zstd_level=zstd_level,
             stat_min=stat_min,
             stat_max=stat_max,
@@ -579,11 +451,12 @@ def append_zarr_distributed(
             index_crc32c=index_crc32c,
             clamp_chunk=False,
             filename="zarr.json.pending",
+            **specs[name],
         )
-    for name in _names:
+    for name in names:
         arr_dir = os.path.join(group_dir, name)
         os.replace(
             os.path.join(arr_dir, "zarr.json.pending"),
             os.path.join(arr_dir, "zarr.json"),
         )
-    return new_total
+    return total

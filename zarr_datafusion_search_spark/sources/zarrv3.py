@@ -350,6 +350,30 @@ class ZarrArrayMeta:
             return self.codecs[0].get("configuration") or {}
         return None
 
+    # -- write layout (what an append must reproduce) -----------------------
+
+    @property
+    def inner_rows(self) -> int | None:
+        """Inner chunk rows of a sharded array, else None."""
+        sharding = self.sharding
+        return int(sharding["chunk_shape"][0]) if sharding is not None else None
+
+    @property
+    def index_crc32c(self) -> bool:
+        """Whether the shard index carries a crc32c checksum."""
+        sharding = self.sharding or {}
+        return any(c.get("name") == "crc32c" for c in sharding.get("index_codecs", []))
+
+    @property
+    def zstd_level(self) -> int:
+        """zstd level of the (inner) chunk codec chain; 0 without zstd."""
+        sharding = self.sharding
+        chain = sharding.get("codecs", []) if sharding is not None else self.codecs
+        return next(
+            ((c.get("configuration") or {}).get("level", 0) for c in chain if c.get("name") == "zstd"),
+            0,
+        )
+
     def decode_chunk(self, raw: bytes | None, rows: int) -> np.ndarray | pa.Array:
         """Decode one (outer) chunk's bytes into ``rows`` logical values: a
         numpy array for fixed-width dtypes, an Arrow string/binary array for
@@ -409,7 +433,7 @@ class ZarrArrayMeta:
         The index is decoded through ``index_codecs`` (only ``bytes`` [+
         ``crc32c``] supported — the spec default).
         """
-        inner_rows = int(cfg["chunk_shape"][0])
+        inner_rows = self.inner_rows
         shard_rows = self.chunk_rows
         if shard_rows % inner_rows != 0:
             raise ZarrError(
@@ -677,6 +701,7 @@ def write_group(
     columns: dict[str, Any],
     chunk_rows: int = 65536,
     zstd_level: int = 0,
+    inner_rows: int | None = None,
 ) -> None:
     """Write a dict of parallel 1-D columns as a Zarr v3 group.
 
@@ -684,27 +709,25 @@ def write_group(
     codecs, and metadata match what ``zarr-python`` v3 produces for the
     reference fixture (data/zarr_store.zarr): ``vlen-utf8``+``zstd`` for
     strings, ``bytes``(little)+``zstd`` for fixed-width types.
+
+    With ``inner_rows`` the group is sharded (``sharding_indexed``): each
+    chunk object of ``chunk_rows`` rows packs ``chunk_rows / inner_rows``
+    independently compressed inner chunks plus a uint64 (offset, nbytes)
+    index at the end — the layout large-scale stores use so object counts
+    stay manageable while reads stay chunk-granular. The index codec is
+    plain ``bytes``; the distributed sink adds ``crc32c``, and readers accept
+    both. Columns are validated before anything is written.
     """
-    group_rel = group_path.strip("/")
-    os.makedirs(store_path, exist_ok=True)
-    _write_json(
-        os.path.join(store_path, "zarr.json"),
-        {"zarr_format": 3, "node_type": "group", "attributes": {}},
-    )
-    group_dir = os.path.join(store_path, group_rel) if group_rel else store_path
-    if group_rel:
-        os.makedirs(group_dir, exist_ok=True)
-        _write_json(
-            os.path.join(group_dir, "zarr.json"),
-            {"zarr_format": 3, "node_type": "group", "attributes": {}},
-        )
-    lengths = set()
-    for name, values in columns.items():
-        lengths.add(len(values))
+    lengths = {len(v) for v in columns.values()}
     if len(lengths) > 1:
         raise ZarrError(f"columns disagree on length: {lengths}")
+    if inner_rows is not None and chunk_rows % inner_rows != 0:
+        raise ZarrError("chunk_rows must be a multiple of inner_rows")
+    for values in columns.values():
+        _array_spec(values)
+    group_dir = init_group(store_path, group_path)
     for name, values in columns.items():
-        _write_array(group_dir, name, values, chunk_rows, zstd_level)
+        _write_array(group_dir, name, values, chunk_rows, zstd_level, inner_rows)
 
 
 def encode_chunk_payload(
@@ -744,6 +767,34 @@ def chunk_stats(vals, is_string: bool):
     return arr.min().item(), arr.max().item()
 
 
+def spec_dtype(
+    is_string: bool, np_dtype=None, datetime_unit: str | None = None
+) -> ZarrDType:
+    """The Zarr dtype of a writer column spec (``is_string``/``np_dtype``/
+    ``datetime_unit``, the keyword arguments of :func:`write_array_metadata`),
+    or raise for a dtype no reader accepts."""
+    if is_string:
+        return ZarrDType("string")
+    if datetime_unit:
+        if datetime_unit not in _DATETIME_UNITS:
+            raise ZarrError(f"unsupported datetime64 unit for writing: {datetime_unit}")
+        return ZarrDType("datetime64", unit=datetime_unit)
+    name = np.dtype(np_dtype).name
+    if name not in _FIXED_NUMPY:
+        raise ZarrError(f"unsupported numpy dtype for writing: {np_dtype}")
+    return ZarrDType(name)
+
+
+def _chunk_codecs(is_string: bool, zstd_level: int) -> list[dict]:
+    """The codec chain of one (inner) chunk, as :func:`encode_chunk_payload`
+    writes it."""
+    if is_string:
+        array_codec: dict = {"name": "vlen-utf8", "configuration": {}}
+    else:
+        array_codec = {"name": "bytes", "configuration": {"endian": "little"}}
+    return [array_codec, {"name": "zstd", "configuration": {"level": zstd_level, "checksum": False}}]
+
+
 def write_array_metadata(
     arr_dir: str,
     n_rows: int,
@@ -759,41 +810,37 @@ def write_array_metadata(
     clamp_chunk: bool = True,
     filename: str = "zarr.json",
 ) -> None:
-    """Write one array's ``zarr.json`` (shape/dtype/codecs/chunk stats).
+    """Write one array's ``zarr.json`` (shape/dtype/codecs/chunk stats) —
+    the one place the array metadata document is built.
+
     With ``inner_rows`` the array is ``sharding_indexed``: ``chunk_rows``
-    becomes the shard size and the codec chain wraps the inner chunks.
+    becomes the shard size and the codec chain wraps the inner chunks in
+    :func:`encode_shard_payload`'s layout (index at the end, plus a
+    ``crc32c`` index checksum when ``index_crc32c``).
 
     ``clamp_chunk`` shrinks ``chunk_shape`` to ``n_rows`` for small
     arrays — correct for :class:`ChunkedArrayWriter`, whose PHYSICAL
     chunks are clamped the same way, but writers whose layout keeps the
-    requested chunk grid (the distributed sink: one unpadded partial
+    requested chunk grid (the distributed sink: one padded partial
     chunk) pass ``clamp_chunk=False`` so a store created from a small
     first batch keeps its intended chunk size for later appends.
     ``filename`` lets a multi-array commit stage every array's metadata
     first (``zarr.json.pending``) and flip them with bare renames."""
-    if is_string:
-        dt: Any = "string"
-        codecs = [
-            {"name": "vlen-utf8", "configuration": {}},
-            {"name": "zstd", "configuration": {"level": zstd_level, "checksum": False}},
-        ]
-        fill: Any = ""
-    else:
-        if datetime_unit:
-            zdt = ZarrDType("datetime64", unit=datetime_unit)
-            fill = -9223372036854775808
-        else:
-            zdt = _numpy_to_zarr_dtype(np.empty(0, np_dtype))
-            fill = 0
-        dt = dtype_to_json(zdt)
-        codecs = [
-            {"name": "bytes", "configuration": {"endian": "little"}},
-            {"name": "zstd", "configuration": {"level": zstd_level, "checksum": False}},
-        ]
+    codecs = _chunk_codecs(is_string, zstd_level)
     if inner_rows is not None:
-        codecs = [
-            sharding_codec_config(inner_rows, is_string, zstd_level, index_crc32c)
-        ]
+        index_codecs = [{"name": "bytes", "configuration": {"endian": "little"}}]
+        if index_crc32c:
+            index_codecs.append({"name": "crc32c", "configuration": {}})
+        codecs = [{
+            "name": "sharding_indexed",
+            "configuration": {
+                "chunk_shape": [inner_rows],
+                "codecs": codecs,
+                "index_codecs": index_codecs,
+                "index_location": "end",
+            },
+        }]
+    fill: Any = "" if is_string else -9223372036854775808 if datetime_unit else 0
     attributes: dict = {}
     if stat_min and any(v is not None for v in stat_min):
         attributes["zdss:chunk_stats"] = {"min": stat_min, "max": stat_max}
@@ -801,7 +848,7 @@ def write_array_metadata(
         os.path.join(arr_dir, filename),
         {
             "shape": [n_rows],
-            "data_type": dt,
+            "data_type": dtype_to_json(spec_dtype(is_string, np_dtype, datetime_unit)),
             "chunk_grid": {
                 "name": "regular",
                 "configuration": {
@@ -937,140 +984,53 @@ def _write_json(path: str, doc: dict) -> None:
     os.replace(tmp, path)
 
 
-def _numpy_to_zarr_dtype(arr: np.ndarray) -> ZarrDType:
-    kind = arr.dtype.kind
-    if kind == "M":
-        unit = np.datetime_data(arr.dtype)[0]
-        if unit not in _DATETIME_UNITS:
-            raise ZarrError(f"unsupported datetime64 unit for writing: {unit}")
-        return ZarrDType("datetime64", unit=unit)
-    name = arr.dtype.name
-    if name in _FIXED_NUMPY:
-        return ZarrDType(name)
-    raise ZarrError(f"unsupported numpy dtype for writing: {arr.dtype}")
+def _array_spec(values: Any) -> dict:
+    """Writer column spec of a :func:`write_group` column (a numpy array, or
+    a list of ``str``); raises for unwritable dtypes."""
+    if not isinstance(values, np.ndarray):
+        return {"is_string": True}
+    spec: dict = {"is_string": False, "np_dtype": values.dtype}
+    if values.dtype.kind == "M":
+        spec["datetime_unit"] = np.datetime_data(values.dtype)[0]
+    spec_dtype(**spec)
+    return spec
 
 
 def _write_array(
-    group_dir: str, name: str, values: Any, chunk_rows: int, zstd_level: int
-) -> None:
-    is_string = not isinstance(values, np.ndarray)
-    kwargs: dict = {"is_string": is_string}
-    if not is_string:
-        if values.dtype.kind == "M":
-            kwargs["datetime_unit"] = np.datetime_data(values.dtype)[0]
-        kwargs["np_dtype"] = values.dtype
-        _numpy_to_zarr_dtype(values)  # validate eagerly
-    w = ChunkedArrayWriter(
-        group_dir,
-        name,
-        chunk_rows=min(chunk_rows, max(len(values), 1)),
-        zstd_level=zstd_level,
-        **kwargs,
-    )
-    if len(values):
-        w.append(values)
-    w.close()
-
-
-def write_sharded_group(
-    store_path: str,
-    group_path: str,
-    columns: dict[str, Any],
-    shard_rows: int = 65536,
-    inner_rows: int = 4096,
-    zstd_level: int = 0,
-) -> None:
-    """Write columns as a sharded Zarr v3 group (``sharding_indexed``).
-
-    Each outer chunk object packs ``shard_rows / inner_rows`` independently
-    compressed inner chunks plus a uint64 (offset, nbytes) index at the end
-    — the layout large-scale stores use so object counts stay manageable
-    while reads stay chunk-granular. Index codec: plain ``bytes`` (the
-    crc32c library is not bundled here; readers accept both).
-    """
-    if shard_rows % inner_rows != 0:
-        raise ZarrError("shard_rows must be a multiple of inner_rows")
-    group_dir = init_group(store_path, group_path)
-    lengths = {len(v) for v in columns.values()}
-    if len(lengths) > 1:
-        raise ZarrError(f"columns disagree on length: {lengths}")
-    for name, values in columns.items():
-        _write_sharded_array(
-            group_dir, name, values, shard_rows, inner_rows, zstd_level
-        )
-
-
-def _write_sharded_array(
     group_dir: str,
     name: str,
     values: Any,
-    shard_rows: int,
-    inner_rows: int,
+    chunk_rows: int,
     zstd_level: int,
+    inner_rows: int | None = None,
 ) -> None:
-    is_string = not isinstance(values, np.ndarray)
-    n = len(values)
-    if is_string:
-        dt_json: Any = "string"
-        inner_codecs = [
-            {"name": "vlen-utf8", "configuration": {}},
-            {"name": "zstd", "configuration": {"level": zstd_level, "checksum": False}},
-        ]
-        fill: Any = ""
-    else:
-        if values.dtype.kind == "M":
-            zdt = ZarrDType("datetime64", unit=np.datetime_data(values.dtype)[0])
-            fill = -9223372036854775808
-        else:
-            zdt = _numpy_to_zarr_dtype(values)
-            fill = 0
-        dt_json = dtype_to_json(zdt)
-        inner_codecs = [
-            {"name": "bytes", "configuration": {"endian": "little"}},
-            {"name": "zstd", "configuration": {"level": zstd_level, "checksum": False}},
-        ]
+    spec = _array_spec(values)
+    if inner_rows is None:
+        w = ChunkedArrayWriter(
+            group_dir,
+            name,
+            chunk_rows=min(chunk_rows, max(len(values), 1)),
+            zstd_level=zstd_level,
+            **spec,
+        )
+        if len(values):
+            w.append(values)
+        w.close()
+        return
+    # sharded: chunk_shape stays the full shard size even for a short
+    # array, and no chunk stats are recorded (tests/test_zarr_layout_golden.py
+    # pins this layout)
     arr_dir = os.path.join(group_dir, name)
     os.makedirs(os.path.join(arr_dir, "c"), exist_ok=True)
-    _write_json(
-        os.path.join(arr_dir, "zarr.json"),
-        {
-            "shape": [n],
-            "data_type": dt_json,
-            "chunk_grid": {
-                "name": "regular",
-                "configuration": {"chunk_shape": [shard_rows]},
-            },
-            "chunk_key_encoding": {
-                "name": "default",
-                "configuration": {"separator": "/"},
-            },
-            "fill_value": fill,
-            "codecs": [
-                {
-                    "name": "sharding_indexed",
-                    "configuration": {
-                        "chunk_shape": [inner_rows],
-                        "codecs": inner_codecs,
-                        "index_codecs": [
-                            {"name": "bytes", "configuration": {"endian": "little"}}
-                        ],
-                        "index_location": "end",
-                    },
-                }
-            ],
-            "attributes": {},
-            "zarr_format": 3,
-            "node_type": "array",
-            "storage_transformers": [],
-        },
-    )
-    for si, s_lo in enumerate(range(0, max(n, 1), shard_rows) if n else []):
-        s_hi = min(s_lo + shard_rows, n)
-        blob = encode_shard_payload(
-            values[s_lo:s_hi], is_string, inner_rows, shard_rows, zstd_level
+    for ci, lo in enumerate(range(0, len(values), chunk_rows)):
+        payload = encode_shard_payload(
+            values[lo : lo + chunk_rows], spec["is_string"], inner_rows, chunk_rows, zstd_level
         )
-        with open(os.path.join(arr_dir, "c", str(si)), "wb") as f:
-            f.write(blob)
+        with open(os.path.join(arr_dir, "c", str(ci)), "wb") as f:
+            f.write(payload)
+    write_array_metadata(
+        arr_dir, len(values), chunk_rows, zstd_level=zstd_level, inner_rows=inner_rows, **spec
+    )
 
 
 def encode_shard_payload(
@@ -1084,8 +1044,8 @@ def encode_shard_payload(
     """Pack one shard's values (< = ``shard_rows`` rows) into a
     ``sharding_indexed`` object: independently compressed inner chunks, a
     uint64 (offset, nbytes) index at the end, trailing inner chunks of a
-    ragged shard marked missing. Stateless — shared by the driver-side
-    sharded fixture writer and the distributed sink's task-side writes."""
+    ragged shard marked missing. Stateless — shared by :func:`write_group`
+    with ``inner_rows`` and the distributed sink's task-side writes."""
     n_inner = shard_rows // inner_rows
     n = len(vals)
     body = bytearray()
@@ -1103,35 +1063,3 @@ def encode_shard_payload(
     if index_crc32c:
         idx += struct.pack("<I", crc32c(idx))
     return bytes(body) + idx
-
-
-def sharding_codec_config(
-    inner_rows: int,
-    is_string: bool,
-    zstd_level: int = 0,
-    index_crc32c: bool = False,
-) -> dict:
-    """The ``sharding_indexed`` codec entry matching
-    :func:`encode_shard_payload`'s layout."""
-    if is_string:
-        inner = [
-            {"name": "vlen-utf8", "configuration": {}},
-            {"name": "zstd", "configuration": {"level": zstd_level, "checksum": False}},
-        ]
-    else:
-        inner = [
-            {"name": "bytes", "configuration": {"endian": "little"}},
-            {"name": "zstd", "configuration": {"level": zstd_level, "checksum": False}},
-        ]
-    index_codecs = [{"name": "bytes", "configuration": {"endian": "little"}}]
-    if index_crc32c:
-        index_codecs.append({"name": "crc32c", "configuration": {}})
-    return {
-        "name": "sharding_indexed",
-        "configuration": {
-            "chunk_shape": [inner_rows],
-            "codecs": inner,
-            "index_codecs": index_codecs,
-            "index_location": "end",
-        },
-    }
