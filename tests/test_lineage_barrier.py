@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 
 from zarr_datafusion_search_spark.operators.cache import (
+    _barrier_mode,
     lineage_barrier,
     release_operator_caches,
 )
@@ -82,3 +83,26 @@ def test_invalid_mode_raises(spark, frame):
             lineage_barrier(frame)
     finally:
         spark.conf.unset("spark.zdss.lineageBarrier")
+
+
+@pytest.mark.parametrize(
+    "master, mode",
+    [
+        ("local", "local"),
+        ("local[4]", "local"),
+        ("local[*]", "local"),
+        ("local[4,2]", "local"),
+        ("local[*, 3]", "local"),
+        ("local-cluster[2,1,1024]", "reliable"),
+        ("spark://host:7077", "reliable"),
+        ("yarn", "reliable"),
+        ("k8s://https://host:6443", "reliable"),
+        ("localhost", "reliable"),
+        ("", "reliable"),
+    ],
+)
+def test_auto_mode_by_master(master, mode):
+    # auto resolves from the master string alone; explicit modes pass through
+    assert _barrier_mode("auto", master) == mode
+    assert _barrier_mode("local", master) == "local"
+    assert _barrier_mode("reliable", master) == "reliable"

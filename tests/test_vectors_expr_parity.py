@@ -90,3 +90,24 @@ def test_qualified_names_backticked(pairs):
         V.dot_product(F.col("x.a"), F.col("y.b")).alias("d"),
     ).orderBy("id").collect()
     assert got == want
+
+
+def test_backtick_in_name_matches_plain_name(pairs):
+    # a column named a`b, referenced in Spark's attribute syntax, takes the
+    # Column DSL path and gives the same values as the plain name
+    odd = pairs.withColumnRenamed("a", "a`b")
+    ref = "`a``b`"
+    got = odd.select(
+        "id",
+        V.dot_product(ref, "b").alias("d"),
+        V.l2_norm(ref).alias("n"),
+        V.cosine_similarity(ref, "b").alias("c"),
+    ).orderBy("id").collect()
+    want = pairs.select(
+        "id",
+        V.dot_product("a", "b").alias("d"),
+        V.l2_norm("a").alias("n"),
+        V.cosine_similarity("a", "b").alias("c"),
+    ).orderBy("id").collect()
+    assert got == want
+    assert V._sql_name(ref) is None and V._sql_name("a`b") is None

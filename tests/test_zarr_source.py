@@ -720,3 +720,29 @@ def test_dataframe_reused_after_filtered_action(spark, tmp_path):
     df = ZarrTable(store, "/meta").to_df(spark)
     assert df.filter("collection = 'collection_a'").count() == len(dates) // 4
     assert df.count() == len(dates)
+
+
+def test_new_session_reads_with_pushed_filter(spark, tmp_path, monkeypatch):
+    """Registration runs once per SparkSession object, and a newSession is
+    a new object with its own SQL conf: after the parent session has read
+    (and been registered), a child session whose pushdown flag is off still
+    gets the format and the flag, and reads a filtered store."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    store, dates = _dated_store(tmp_path)
+    table = ZarrTable(store, "/meta")
+    assert table.to_df(spark).count() == len(dates)
+    calls = []
+    real_register = DataSourceRegistration.register
+    monkeypatch.setattr(
+        DataSourceRegistration, "register",
+        lambda self, ds: calls.append(ds) or real_register(self, ds),
+    )
+    child = spark.newSession()
+    child.conf.set("spark.sql.python.filterPushdown.enabled", "false")
+    for _ in range(2):
+        df = table.to_df(child)
+        assert df.filter("collection = 'collection_a'").count() == len(dates) // 4
+        table.to_df(spark)
+    assert child.conf.get("spark.sql.python.filterPushdown.enabled") == "true"
+    assert len(calls) == 1

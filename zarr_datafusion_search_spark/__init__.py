@@ -21,6 +21,9 @@ Public API::
 mirroring the reference's 3-call UX (reference README.md:29-42).
 """
 
+# first: stops importlib.invalidate_caches() re-reading unchanged zip
+# archives such as pyspark.zip on every Python worker call (see module)
+from zarr_datafusion_search_spark import _zipimport  # noqa: F401
 from zarr_datafusion_search_spark.engine import SessionContext
 from zarr_datafusion_search_spark.sources.zarr_table import ZarrTable
 from zarr_datafusion_search_spark.sources.zarr_datasource import ZarrDataSource

@@ -33,8 +33,10 @@ def _sql_name(col: Column | str) -> str | None:
     ann_bruteforce_topk was entirely the two extra l2_norm DSL builds).
     One ``F.expr`` parse is milliseconds and yields the IDENTICAL
     Catalyst tree. Same precedent as ``srp_bucket``'s expression string.
+    A name holding a backtick also gets None, so the Column DSL path
+    resolves it.
     """
-    if isinstance(col, str):
+    if isinstance(col, str) and "`" not in col:
         return ".".join(f"`{p}`" for p in col.split("."))
     return None
 

@@ -13,6 +13,7 @@ with :func:`release_operator_caches` (or scope them with
 from __future__ import annotations
 
 import logging
+import re
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
@@ -55,6 +56,24 @@ def operator_cache_scope():
         release_operator_caches()
 
 
+# the single-JVM masters of SparkContext.createTaskScheduler: local,
+# local[N], local[*] and local[N,F]. local-cluster[...] runs separate
+# executor processes, which can be lost, so it is not one of them.
+_LOCAL_MASTER = re.compile(r"local(\[([0-9]+|\*)(\s*,\s*[0-9]+)?\])?")
+
+
+def _barrier_mode(mode: str, master: str) -> str:
+    """``local`` or ``reliable`` for a ``spark.zdss.lineageBarrier`` value
+    under ``master`` (``auto`` resolves by the master)."""
+    if mode not in ("auto", "local", "reliable"):
+        raise ValueError(
+            f"spark.zdss.lineageBarrier must be auto|local|reliable, got {mode!r}"
+        )
+    if mode != "auto":
+        return mode
+    return "local" if _LOCAL_MASTER.fullmatch(master) else "reliable"
+
+
 def lineage_barrier(df: DataFrame, eager: bool = False) -> DataFrame:
     """Materialization barrier with a deploy-mode-aware durability policy
     (round 13, VERDICT r12 what's-wrong #4).
@@ -73,8 +92,9 @@ def lineage_barrier(df: DataFrame, eager: bool = False) -> DataFrame:
       otherwise a TRACKED ``persist`` + barrier-free frame (lineage kept,
       so executor loss recomputes — fault-tolerant, at the cost of the
       CacheManager sharing semantics the checkpoint would have avoided).
-    - ``auto`` (default): ``local`` under a ``local[...]`` master,
-      ``reliable`` under any cluster master — safe by default where
+    - ``auto`` (default): ``local`` under a single-JVM master (``local``,
+      ``local[N]``, ``local[*]``, ``local[N,F]``), ``reliable`` under any
+      other, ``local-cluster[...]`` included — safe by default where
       fault tolerance is real, fast where it is moot.
 
     Eagerness is preserved in every branch (an eager barrier is part of
@@ -85,17 +105,11 @@ def lineage_barrier(df: DataFrame, eager: bool = False) -> DataFrame:
         mode = spark.conf.get("spark.zdss.lineageBarrier", "auto")
     except Exception:
         mode = "auto"
-    if mode not in ("auto", "local", "reliable"):
-        raise ValueError(
-            f"spark.zdss.lineageBarrier must be auto|local|reliable, got {mode!r}"
-        )
-    if mode == "auto":
-        try:
-            master = spark.conf.get("spark.master", "")
-        except Exception:
-            master = ""
-        mode = "local" if master.startswith("local") else "reliable"
-    if mode == "local":
+    try:
+        master = spark.conf.get("spark.master", "")
+    except Exception:
+        master = ""
+    if _barrier_mode(mode, master) == "local":
         return df.localCheckpoint(eager=eager)
     if spark.sparkContext.getCheckpointDir() is not None:
         # persist first: a reliable checkpoint otherwise recomputes the

@@ -18,6 +18,7 @@ Schema is inferred eagerly at construction, like the reference
 
 from __future__ import annotations
 
+import weakref
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -113,14 +114,36 @@ class ZarrTable:
         return StructType([by_name[c] for c in columns])
 
 
+# sessions _ensure_registered has already prepared; weak, so a stopped
+# session is not kept alive by it
+_REGISTERED: weakref.WeakSet[SparkSession] = weakref.WeakSet()
+
+
 def _ensure_registered(spark: SparkSession) -> None:
+    """Register the ``zarr`` format and turn on Python filter pushdown, once
+    per ``SparkSession`` object: both are per-session state, and doing them
+    again on every ``to_df`` cost about 9 ms of py4j calls per query."""
+    if spark in _REGISTERED:
+        return
     from zarr_datafusion_search_spark.sources.zarr_datasource import ZarrDataSource
 
+    # Spark 4.1 checks a new data source name against the thread's ACTIVE
+    # session, not the registering one: a newSession() of a session that
+    # registered "zarr" is refused as a duplicate and then cannot resolve
+    # format("zarr"). So register with this session active.
+    jsessions = spark._jvm.org.apache.spark.sql.SparkSession
+    previous = jsessions.getActiveSession()
+    jsessions.setActiveSession(spark._jsparkSession)
     try:
         spark.dataSource.register(ZarrDataSource)
     except Exception:
-        # already registered (Spark raises on duplicate in some versions)
+        # already registered on this session
         pass
+    finally:
+        if previous.isDefined():
+            jsessions.setActiveSession(previous.get())
+        else:
+            jsessions.clearActiveSession()
     # The reader implements pushFilters, which Spark refuses to plan unless
     # this flag is on — sessions not built by engine.build_session (e.g. the
     # verification driver's) would otherwise fail on every zarr read. It is
@@ -129,3 +152,4 @@ def _ensure_registered(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     except Exception:
         pass
+    _REGISTERED.add(spark)
