@@ -197,3 +197,41 @@ def test_refined_centroids_match_retired_pipeline(spark):
     assert [c for c, _ in got] == [c for c, _ in want]
     for (gc, gv), (wc, wv) in zip(got, want):
         assert gv == pytest.approx(wv, abs=0.0, rel=0.0), (gc, gv, wv)
+
+
+def test_rank_cosines_treats_infinite_cosines_as_values(spark):
+    """±inf cosines are ranked as the values they are (Spark's ``round``
+    keeps them); only a row whose every cosine is NULL takes the lowest
+    centroid id. The expected cell of every row is Spark's own window
+    order over the same cosines."""
+    import numpy as np
+
+    inf, nan, null = float("inf"), float("nan"), None
+    rows = [
+        [null, inf, 0.5],
+        [null, -inf, null],
+        [-inf, -inf, null],
+        [null, null, null],
+        [0.3, inf, inf],
+        [nan, inf, 0.1],
+        [-inf, 0.2, -0.2],
+        [0.1234564, 0.1234565, -inf],
+        [inf, null, nan],
+    ]
+    cid = np.array([3, 5, 7])
+    val = np.array([[nan if v is None else v for v in r] for r in rows])
+    valid = np.array([[v is not None for v in r] for r in rows])
+    got = S._rank_cosines(val, valid, cid).tolist()
+    cosines = spark.createDataFrame(
+        [(i, int(cid[j]), v) for i, r in enumerate(rows) for j, v in enumerate(r)],
+        "row int, centroid_id long, cos double",
+    )
+    w = Window.partitionBy("row").orderBy(F.round("cos", 6).desc(), F.col("centroid_id"))
+    best = dict(
+        cosines.withColumn("_r", F.row_number().over(w))
+        .filter(F.col("_r") == 1)
+        .select("row", "centroid_id")
+        .collect()
+    )
+    assert got == [best[i] for i in range(len(rows))]
+    assert got[:4] == [5, 5, 3, 3]

@@ -106,3 +106,36 @@ def test_auto_mode_by_master(master, mode):
     assert _barrier_mode("auto", master) == mode
     assert _barrier_mode("local", master) == "local"
     assert _barrier_mode("reliable", master) == "reliable"
+
+
+def test_reliable_without_dir_refuses_iterative_callers(spark, frame):
+    """Reliable mode with no checkpoint dir: an iterative barrier raises a
+    clear error instead of nesting lineage and pinning a cache each round,
+    and so do pagerank, label_propagation and bpe_train; a one-shot
+    barrier still falls back to a lineage-keeping persist."""
+    from zarr_datafusion_search_spark.operators.graph import label_propagation, pagerank
+    from zarr_datafusion_search_spark.operators.text import bpe_train
+
+    edges = spark.createDataFrame(
+        [("a", "b", 0.9), ("b", "c", 0.8), ("c", "a", 0.7)], "doc_a string, doc_b string, jaccard double"
+    )
+    seeds = spark.createDataFrame([("a", "web")], "node string, label string")
+    docs = spark.createDataFrame([("low lower lowest",), ("newer newest",)], "text string")
+    spark.conf.set("spark.zdss.lineageBarrier", "reliable")
+    try:
+        assert spark.sparkContext.getCheckpointDir() is None
+        with pytest.raises(RuntimeError, match="setCheckpointDir"):
+            lineage_barrier(frame, eager=True, iterative=True)
+        for run in (
+            lambda: pagerank(edges, src="doc_a", dst="doc_b", driver_max_nodes=0),
+            lambda: label_propagation(edges, seeds),
+            lambda: bpe_train(docs, n_merges=2),
+        ):
+            with pytest.raises(RuntimeError, match="iterative operator"):
+                run()
+        assert "InMemoryRelation" in _plan(lineage_barrier(frame, eager=True))
+    finally:
+        spark.conf.unset("spark.zdss.lineageBarrier")
+        release_operator_caches()
+    # the local barrier is unaffected
+    assert lineage_barrier(frame, eager=True, iterative=True).count() == 100

@@ -704,6 +704,17 @@ def test_sql_view_reused_after_filtered_query(spark, tmp_path):
     assert covered == 2 * 256
 
 
+def test_dataframe_reused_after_filtered_action(spark, tmp_path):
+    """``ZarrTable.to_df`` is the JVM reader, and DSv2 builds one scan
+    builder per query: a DataFrame reused after a filtered action reads
+    every row again."""
+    store, dates = _dated_store(tmp_path)
+    df = ZarrTable(store, "/meta").to_df(spark)
+    assert df.filter("collection = 'collection_a'").count() == len(dates) // 4
+    assert df.count() == len(dates)
+    assert len(df.collect()) == len(dates)
+
+
 @pytest.mark.xfail(
     strict=True,
     reason=(
@@ -712,12 +723,20 @@ def test_sql_view_reused_after_filtered_query(spark, tmp_path):
         "PythonScanBuilder.pushFilters replaces it only when filters are "
         "pushed, so reusing a DataFrame after a filtered action reads the "
         "filtered rows. SessionContext.sql re-resolves views; a bare "
-        "DataFrame cannot be fixed from the data source."
+        "format('zarr') DataFrame cannot be fixed from the data source."
     ),
 )
-def test_dataframe_reused_after_filtered_action(spark, tmp_path):
+def test_python_source_dataframe_reused_after_filtered_action(spark, tmp_path):
+    from zarr_datafusion_search_spark.sources.zarr_table import _ensure_registered
+
     store, dates = _dated_store(tmp_path)
-    df = ZarrTable(store, "/meta").to_df(spark)
+    _ensure_registered(spark)
+    df = (
+        spark.read.format("zarr")
+        .option("group", "/meta")
+        .schema(ZarrTable(store, "/meta").schema)
+        .load(store)
+    )
     assert df.filter("collection = 'collection_a'").count() == len(dates) // 4
     assert df.count() == len(dates)
 

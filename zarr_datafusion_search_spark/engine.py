@@ -155,7 +155,9 @@ class SessionContext:
         and ``PythonScanBuilder.pushFilters`` replaces that cache only when a
         query pushes filters. A view reused after a filtered query would
         hand a query that pushes none the filtered rows, so a view some
-        earlier query may have resolved is registered again first.
+        earlier query may have resolved is registered again first. The JVM
+        reader builds one scan per query and does not need this; a table
+        read through the Python fallback (remote store, no ``javac``) does.
         """
         for name in self._used_views:
             self._zarr_views[name].register(self.spark, name)

@@ -212,7 +212,7 @@ def pagerank(
                     RANK_ROUND,
                 ).alias("rank"),
             )
-            .transform(_lb, eager=True)
+            .transform(_lb, eager=True, iterative=True)
         )
     return ranks.select("node", F.round("rank", 6).alias("rank"))
 
@@ -585,7 +585,7 @@ def label_propagation(
                 best.join(seeds.select("node"), "node", "left_anti")
             )
             .unionByName(keep_prev)
-            .transform(_lb, eager=True)
+            .transform(_lb, eager=True, iterative=True)
         )
     return labels
 

@@ -1141,6 +1141,51 @@ def quantize_embeddings_int8(
     )
 
 
+def _rank_cosines(val, valid, cid):
+    """Per row of the (rows, centroids) cosine matrix ``val``, the centroid
+    id Spark's ``ORDER BY round(cos, 6) DESC NULLS LAST, id`` puts first.
+
+    ``valid`` is False where the cosine is NULL (``try_divide`` by an exact
+    zero). A NaN cosine ranks first (Spark orders NaN above every double),
+    ±inf cosines rank as the values they are (``round`` keeps them), and
+    only a row whose every cosine is NULL takes the lowest centroid id.
+    """
+    import numpy as np
+    from decimal import ROUND_HALF_UP, Decimal
+
+    m = len(val)
+    out = np.empty(m, dtype=np.int64)
+    nan_mask = np.isnan(val) & valid  # true NaN cosines, not NULLs
+    ranked = valid & ~nan_mask  # ordinary values, ±inf included
+    nan_rows = nan_mask.any(axis=1)
+    if nan_rows.any():
+        # Spark sorts NaN above every double: lowest-id NaN wins
+        out[nan_rows] = cid[nan_mask[nan_rows].argmax(axis=1)]
+    allnull = ~ranked.any(axis=1) & ~nan_rows
+    out[allnull] = cid[0]
+    plain = ~nan_rows & ~allnull
+    key = np.where(ranked, val, -np.inf)
+    rowmax = key.max(axis=1) if val.shape[1] else np.full(m, -np.inf)
+    # rounding can only reorder cosines within 2e-6 of each other;
+    # 2.5e-6 is margin. Rows with ONE candidate in that band take it
+    # (the max; the first max = lowest centroid id on exact ties).
+    band_mask = ranked & (key >= (rowmax[:, None] - 2.5e-6))
+    n_cand = band_mask.sum(axis=1)
+    single = plain & (n_cand == 1)
+    out[single] = cid[band_mask[single].argmax(axis=1)]
+    six = Decimal("1e-6")
+    for i in np.nonzero(plain & (n_cand > 1))[0]:
+        best_j = best_r = None
+        for j in np.nonzero(band_mask[i])[0]:  # ascending: first max wins ties
+            r = Decimal(repr(float(val[i, j])))
+            if r.is_finite():
+                r = r.quantize(six, rounding=ROUND_HALF_UP)
+            if best_r is None or r > best_r:
+                best_r, best_j = r, j
+        out[i] = cid[best_j]
+    return out
+
+
 def _kmeans_assign_udf(cent_ids, cmat):
     """Arrow-batched cell assignment, value-identical to the retired
     crossJoin + ``round(try_divide(dot, vn*cn), 6)`` window argmax
@@ -1176,7 +1221,6 @@ def _kmeans_assign_udf(cent_ids, cmat):
     def _assign_fn(vecs):
         import numpy as np
         import pandas as pd
-        from decimal import ROUND_HALF_UP, Decimal
 
         n = len(vecs)
         if not n:
@@ -1208,38 +1252,7 @@ def _kmeans_assign_udf(cent_ids, cmat):
         valid = denom != 0.0
         with np.errstate(divide="ignore", invalid="ignore"):
             val = dot / denom
-        nan_mask = np.isnan(val) & valid  # true NaN cosines, not NULLs
-        val = np.where(valid, val, -np.inf)  # NULL -> ranks last
-        out = np.empty(n, dtype=np.int64)
-        good_out = np.empty(m, dtype=np.int64)
-        nan_rows = nan_mask.any(axis=1)
-        if nan_rows.any():
-            # Spark sorts NaN above every double: lowest-id NaN wins
-            good_out[nan_rows] = cid[nan_mask[nan_rows].argmax(axis=1)]
-        val_clean = np.where(nan_mask, -np.inf, val)
-        rowmax = val_clean.max(axis=1) if k else np.full(m, -np.inf)
-        allnull = ~np.isfinite(rowmax) & ~nan_rows  # -inf: every cosine NULL
-        good_out[allnull] = cid[0]
-        plain = ~nan_rows & ~allnull
-        # rounding can only reorder cosines within 2e-6 of each other;
-        # 2.5e-6 is margin. Rows with ONE candidate in that band take the
-        # plain argmax (first max = lowest centroid id on exact ties).
-        band_mask = val_clean >= (rowmax[:, None] - 2.5e-6)
-        n_cand = band_mask.sum(axis=1)
-        single = plain & (n_cand == 1)
-        good_out[single] = cid[val_clean[single].argmax(axis=1)]
-        six = Decimal("1e-6")
-        for i in np.nonzero(plain & (n_cand > 1))[0]:
-            js = np.nonzero(band_mask[i])[0]
-            best_j = best_r = None
-            for j in js:  # ascending centroid order: first max wins ties
-                r = Decimal(repr(float(val_clean[i, j]))).quantize(
-                    six, rounding=ROUND_HALF_UP
-                )
-                if best_r is None or r > best_r:
-                    best_r, best_j = r, j
-            good_out[i] = cid[best_j]
-        out[~bad] = good_out
+        out[~bad] = _rank_cosines(val, valid, cid)
         out[bad] = cid[0]
         return pd.Series(out)
 

@@ -1716,7 +1716,7 @@ def bpe_train(
         merges.append((rank, a, b, n))
         words = words.select(
             _bpe_merge_fold(F.col("syms"), a, b).alias("syms"), "freq"
-        ).transform(_lb, eager=True)
+        ).transform(_lb, eager=True, iterative=True)
     return spark.createDataFrame(
         merges, "merge_rank int, lhs string, rhs string, pair_count long"
     )

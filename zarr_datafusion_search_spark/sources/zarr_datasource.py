@@ -329,8 +329,8 @@ class ZarrReader(_ZarrScan, DataSourceReader):
                 continue  # stats don't cover the range: don't prune
             may = False
             for mn, mx in zip(mins, maxs):
-                if mn is None or mx is None:
-                    may = True  # unknown chunk: must read
+                if mn is None or mx is None or mn != mn or mx != mx:
+                    may = True  # unknown (or NaN) stats: must read
                     break
                 if isinstance(f, EqualTo):
                     ok = mn <= val <= mx
@@ -389,9 +389,9 @@ class ZarrReader(_ZarrScan, DataSourceReader):
                 }[meta.dtype.unit or "us"]
                 ticks = ticks_us * per_us
                 return int(ticks) if ticks.denominator == 1 else ticks
-            if isinstance(v, (int, float, str)):
+            if isinstance(v, (int, float, str)) and v == v:
                 return v
-            return None
+            return None  # NaN compares false with every stat
 
         if isinstance(f, In):
             vals = [conv(v) for v in f.value]

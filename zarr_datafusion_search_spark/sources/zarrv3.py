@@ -421,7 +421,8 @@ class ZarrArrayMeta:
         endian = (array_codec.get("configuration") or {}).get("endian", "little")
         np_dt = self.dtype.numpy_dtype()
         if endian == "big":
-            np_dt = np_dt.newbyteorder(">")
+            # swapped to little-endian: Arrow takes no byte-swapped arrays
+            return np.frombuffer(bytes(buf), dtype=np_dt.newbyteorder(">"))[:rows].astype(np_dt)
         arr = np.frombuffer(bytes(buf), dtype=np_dt)
         return arr[:rows]
 
