@@ -1,791 +1,60 @@
-#!/usr/bin/env python
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS].
+#!/usr/bin/env python3
+"""Headline benchmark: the ``sql_pipeline`` workload of ``perfbench``.
 
-Output contract (VERDICT r03 §1 — the r03 record was driver-unparseable
-because the single JSON line outgrew the driver's stdout-tail capture):
+    python bench.py
 
-* FULL per-query detail (every section, every engine, slowest-3, zarr
-  microbench, protocol notes) is written to ``BENCH_DETAIL.json`` next to
-  this file.
-* The LAST stdout line is ONE COMPACT summary JSON (section totals +
-  DuckDB ratios + headline per-query floats), kept under ~1800 chars so
-  the driver's tail capture always holds the complete line.
-* ``spark.ui.showConsoleProgress`` is forced off so progress bars can
-  never pollute the tail.
-
-Protocol (BASELINE.md): per query, 1 warmup + median of 3 timed runs for
-the fixed cross-round sections; the catch-all ``coverage`` section (every
-remaining registered query — VERDICT r03 §3) uses 1 warmup + 1 timed run
-to bound total wall-clock. Results are materialized with a count() action
-so the measured time includes the whole plan. DuckDB pairing: identical
-oracle SQL over the same parquet, same warmup+median, timed after all
-Spark work.
-
-Fixed-cost note (VERDICT r03 §8): Spark pays a per-query fixed job cost
-(driver planning + scheduling + task launch) that DuckDB does not; at
-sf0.1 many pipeline queries are sub-second, so section ratios conflate
-that constant with engine throughput. The bench measures the fixed cost
-directly (median of trivial `spark.range(8).count()` jobs) and reports,
-per section, BOTH the raw ratio and `ratio_net` =
-(spark_total - n_queries * fixed_cost_s) / duckdb_total. The raw ratio is
-what a user sees at this scale; the net ratio is what survives a 100x
-scale-up where per-query work dominates the constant.
+Runs ``perfbench/run.py --workload sql_pipeline --seed 1 --seconds 6`` (the
+23 headline registry queries on seeded sf0.01 tables, each timed as a noop
+write), passes its output through, then prints one JSON line:
+``{"metric", "value": wall_s, "unit": "sec", "queries": {name: median s}}``.
+All timing is perfbench's. Exits with perfbench's return code, or 1 when the
+run printed no result line or its results failed verification.
 """
-
-from __future__ import annotations
 
 import json
 import os
-import re
-import statistics
+import subprocess
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-
-#: contention gating (probe envelope, load1 ceiling, wait budget, retry
-#: count) lives in benchutil so all three harnesses (bench / bench_scale /
-#: bench_skew) share ONE protocol — VERDICT r08 ask #4. History: idle-host
-#: fixed-cost probes measure 0.11-0.13 s on this 32-cpu box; two rounds of
-#: headline movement (1.58->1.92->1.75x) were fully explained by host
-#: weather, and the r8 record passed the probe at load1=4.18 yet drifted
-#: +15-30 % on untouched queries — hence the added load1 ceiling (r08
-#: "what's wrong" #4). Records with ``contended: true`` are not quotable.
-from zarr_datafusion_search_spark.benchutil import (  # noqa: E402
-    ANCHOR_CEILING_S,
-    BENCH_ATTEMPTS,
-    CONTENTION_WAIT_S,
-    IDLE_FIXED_COST_S,
-    cpu_stat_snapshot as _cpu_stat_snapshot,
-    host_state_stamp,
-    is_contended,
-    measure_fixed_cost as _measure_fixed_cost,
-    measure_mem_write_bandwidth as _measure_mem_bw,
-    steal_pct_between as _steal_pct_between,
-    wait_for_anchor as _wait_for_anchor,
-    wait_for_idle as _wait_for_idle,
-)
-
-#: the anchor query (VERDICT r11 ask #2): a stable headline member with a
-#: tight committed idle band, timed after the idle wait with the bench's
-#: own per-query protocol. See benchutil.ANCHOR_CEILING_S for the band.
-ANCHOR_QUERY = "q1_pricing_summary"
-DETAIL_PATH = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-)
-
-#: headline queries: one per operator family, heaviest variants.
-#: FIXED membership across rounds (BASELINE.md) for comparability.
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "broadcast_dim_join",
-    "count_distinct",
-    "rollup_agg",
-    "window_rank",
-    "window_frame_rows",
-    "events_tumbling_window",
-    "q4_order_priority",
-    "correlated_exists",
-    # training-data pipeline operators (first-class at 100 TB)
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_ngram_jaccard",
-    "dedup_embedding_cosine",
-    "ann_bruteforce_topk",
-    "ann_lsh_topk",
-    "text_quality_score",
-    "text_fingerprint",
-    "asof_join_clicks_purchases",
-    "sessionization",
-]
-
-#: round-2 additions, fixed membership. OFFICIAL RECORD IS AT 10x SCALE
-#: (VERDICT r04 ask #6): every member is sub-second on both engines at
-#: sf0.1, so the sf0.1 section ratio measured Spark's fixed per-query job
-#: cost, not throughput (6.53x raw there vs 0.95x for the same workloads
-#: at 10x). The section now runs against the deterministic 10x scale-up
-#: of the pipeline tables (bench_scale.build_scale_dir — same paired
-#: warmup+median protocol), where per-query work dominates the constant;
-#: sf0.1 history lives in BENCH_r04 and earlier.
-EXTENDED = [
-    "text_bm25_search",
-    "decontaminate_against_eval",
-    "interval_join_attribution",
-    "bucketed_colocated_join",
-    "profile_documents",
-    "funnel_stages",
-    "mixture_sample_domains",
-    "bigram_pmi_top",
-    "scd2_user_state",
-    "merge_apply_snapshot",
-    "dedup_semantic",
-    "dedup_duplicate_spans",
-    "dedup_remove_spans",
-    "text_vocab_coverage",
-    "shard_by_token_budget",
-    "ann_hard_negatives",
-    "embedding_random_projection",
-]
-
-#: round-3 additions, fixed membership
-EXTENDED_R3 = [
-    "text_tfidf_search",
-    "text_bigram_perplexity",
-    "pagerank_event_types",
-    "multimodal_real_image_features",
-    "multimodal_real_wav_features",
-    "multimodal_real_frame_features",
-    "multimodal_real_resize",
-    "dedup_minhash_cross_corpus",
-    "multimodal_image_channel_stats",
-    "snapshot_diff_user_state",
-    "frequent_terms_heavy_hitters",
-    "bpe_merge_candidates",
-    "frequent_itemset_pairs",
-    "dedup_event_cooldown",
-    "embedding_centroid_drift",
-    "outliers_mad_value",
-    "topk_per_source_twophase",
-    "dedup_cluster_size_histogram",
-    "time_decayed_engagement",
-    "label_propagation_sources",
-]
-
-#: round-4 section: the operators registered after r3's final bench run
-#: (VERDICT r03 "What's missing" §3) plus round-4 additions.
-EXTENDED_R4 = [
-    "streaming_zarr_tail_counts",
-    "dedup_ngram_containment",
-    "skipgram_cooccurrence",
-    "equi_depth_bins",
-    "event_transition_matrix",
-    "cohort_retention_weekly",
-    "funnel_time_to_convert",
-    "embedding_standardize_robust",
-    "join_key_skew_report",
-    "text_normalize",
-    # round-4 additions
-    "graph_clustering_coefficient",
-    "neighbor_chars_2hop",
-    "source_term_kl_drift",
-    "vocab_growth_curve",
-    "event_value_anomalies",
-    "embedding_covariance_top_pairs",
-    "leakage_safe_split",
-    "crosslingual_align_candidates",
-    "span_corruption_pairs",
-    "source_ngram_diversity",
-    "event_value_quantile_sketch",
-    "text_char_entropy",
-    "dedup_pairs_editdist_verify",
-    "source_vocab_similarity",
-    "frequent_event_paths",
-    "cross_source_duplication",
-    "user_max_inactivity_gap",
-    "partitioned_dataset_prune",
-    "schema_evolution_union",
-    "zorder_locality_audit",
-    "compaction_plan_greedy",
-    "dpp_partitioned_join",
-    "bloom_join_prefilter",
-    "groupwise_auc_score",
-    "annotator_agreement_kappa",
-    "mixture_reweight_ess",
-    "countmin_sketch_error",
-    "k_anonymity_audit",
-    "contribution_cap_report",
-    "rollup_reuse_hourly_daily",
-    "join_size_estimate_sampled",
-    "data_freshness_audit",
-    "training_mix_anneal",
-    "record_linkage_blocked",
-    "feature_hash_collisions",
-    "shuffle_partition_advisor",
-    "zone_map_skipping_audit",
-    "event_changepoint_cusum",
-    "session_engagement_metrics",
-    "temporal_split_embargo",
-    "stratified_kfold_counts",
-    "dataset_card_metrics",
-    "padding_waste_audit",
-]
-
-#: round-5 additions, fixed membership
-EXTENDED_R5 = [
-    "dedup_minhash_lsh_guarded",
-    "multimodal_real_jpeg_features",
-    "governance_pii_scan",
-    "chunk_dedup_stats",
-    "mixture_temperature_weights",
-    "label_consistency_audit",
-    "length_percentile_trim",
-    "bpe_train_merges",
-]
-
-#: the coverage catch-all's heavy members (VERDICT r07 ask #7): the
-#: iterative / amplifying queries that dominated the section every round
-#: (IVF-Lloyd, connected components, the LPA and minhash opt-out
-#: variants, the fake-media embed pipeline). All touch only the scaled
-#: tables, so like extended/r3/r4/r5 their official record moves to the
-#: 10x scale-up where per-query work dominates the fixed job constant.
-#: 1 timed run like the rest of coverage (bounding total bench
-#: wall-clock); the remaining sf0.1 coverage members are the genuinely
-#: light per-query tail.
-COVERAGE_HEAVY_10X = [
-    "ann_ivf_topk",
-    "ann_ivf_kmeans_recall",
-    "label_propagation_sources_guarded",
-    "label_propagation_sources_unguarded",
-    "dedup_minhash_lsh_unguarded",
-    "dedup_components",
-    "dedup_cluster_survivors",
-    "multimodal_embed_ann",
-]
-
-#: timed Spark-only, reported WITHOUT a DuckDB ratio (VERDICT r07 ask #7):
-#: these run the real Structured Streaming micro-batch harness
-#: (readStream -> sink -> table), so the wall-clock includes stream
-#: startup/commit machinery; the DuckDB "twin" is the equivalent BATCH
-#: aggregate — a correctness oracle, not an engine peer — and pairing the
-#: two as a throughput ratio misstates both engines.
-UNPAIRED_STREAMING = {
-    "streaming_tumbling_counts": "real micro-batch harness vs batch-only "
-    "oracle; timed spark-only",
-}
-
-#: registered queries deliberately NOT timed, with the reason the judge
-#: reads. Everything registered and not listed here lands in a section.
-EXCLUDED = {
-    "sink_zarr_roundtrip": "sink benchmark would measure store-write I/O; "
-    "its oracle aggregates the parquet input, not a comparable workload",
-    "sink_zarr_distributed_roundtrip": "same: distributed sink write, "
-    "no comparable DuckDB-side workload",
-    "sink_zarr_append_roundtrip": "same: append sink write path",
-}
+COMMAND = ["perfbench/run.py", "--workload", "sql_pipeline", "--seed", "1", "--seconds", "6"]
+METRIC = "sql_pipeline wall_s (perfbench)"
+MEDIANS = "op medians: "
 
 
-def _sf_from_dir(d: str) -> float:
-    m = re.search(r"sf([0-9.]+)", d)
-    return float(m.group(1)) if m else -1.0
+def summary(returncode: int, lines: list[str]) -> tuple[str | None, int]:
+    """The last line for one perfbench run's stdout, and the exit code.
+
+    There is no line unless the run exited 0, ended with its result JSON,
+    verified every result and reported per-query medians.
+    """
+    if returncode != 0:
+        return None, returncode
+    text = [line.strip() for line in lines if line.strip()]
+    try:
+        result = json.loads(text[-1])
+        wall_s = result["metrics"]["wall_s"]["value"]
+    except (IndexError, ValueError, TypeError, KeyError):
+        return None, 1
+    medians = [line[len(MEDIANS):] for line in text if line.startswith(MEDIANS)]
+    if result.get("correct") is not True or not medians:
+        return None, 1
+    queries = {k: float(v) for k, v in (item.split("=") for item in medians[-1].split(", "))}
+    return json.dumps({"metric": METRIC, "value": wall_s, "unit": "sec", "queries": queries}), 0
 
 
-#: per-run wall-clock cap for a DuckDB oracle during the paired measurement
-DUCK_TIMEOUT_S = float(os.environ.get("SPARK_GRAFT_DUCK_TIMEOUT", "30"))
-
-
-def _duckdb_times(
-    registry, names: list[str], runs: int, data_dir: str
-) -> tuple[dict, list]:
-    """Median DuckDB wall-clock per oracle (1 warmup + median of ``runs``)
-    over views on the SAME parquet files. Each oracle is timed as
-    ``SELECT count(*) FROM (<oracle>)`` — the exact symmetric of the Spark
-    side's ``.count()`` action. Returns (times, skipped)."""
-    import threading
-
-    import duckdb
-
-    from zarr_datafusion_search_spark.plans.registry import TABLES
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{data_dir}/{t}.parquet'"
-        )
-    times_by_query: dict[str, float] = {}
-    skipped: list[str] = []
-    for name in names:
-        sql = registry[name].oracle
-        if not sql:
-            skipped.append(name)
-            continue
-        counted = f"SELECT count(*) FROM ({sql}) AS _q"
-        times = []
-        ok = True
-        for i in range(runs + 1):
-            fired = []
-
-            def _interrupt():
-                fired.append(1)
-                con.interrupt()
-
-            watchdog = threading.Timer(DUCK_TIMEOUT_S, _interrupt)
-            watchdog.start()
-            t0 = time.perf_counter()
-            try:
-                con.execute(counted).fetchall()
-            except Exception:
-                ok = False
-            finally:
-                watchdog.cancel()
-            if fired and ok:
-                # timer fired after the query finished but before cancel():
-                # drain the pending interrupt on a throwaway statement
-                try:
-                    con.execute("SELECT 1").fetchall()
-                except Exception:
-                    pass
-            if not ok:
-                break
-            if i > 0:
-                times.append(time.perf_counter() - t0)
-        if ok:
-            times_by_query[name] = round(statistics.median(times), 4)
-        else:
-            skipped.append(name)
-    con.close()
-    return times_by_query, skipped
-
-
-ZARR_BENCH_ROWS = 1_000_000
-ZARR_BENCH_STORE = "/tmp/zdss_bench_zarr_1m.zarr"
-
-
-def _zarr_scan_bench(spark) -> dict:
-    """Zarr-scan microbench (BASELINE.md): ~1M-row store produced by the
-    same recipe as the reference's generator, scanned chunk-partitioned.
-    Dates are written sorted so the filtered scan exercises chunk pruning."""
-    import numpy as np
-
-    from zarr_datafusion_search_spark import ZarrTable
-    from zarr_datafusion_search_spark.sources import zarrv3
-
-    if not os.path.exists(os.path.join(ZARR_BENCH_STORE, "zarr.json")):
-        rng = np.random.default_rng(42)
-        n = ZARR_BENCH_ROWS
-        base = np.datetime64("2023-01-01", "ms")
-        dates = np.sort(
-            base + rng.integers(0, 365 * 24 * 3600 * 1000, n).astype("timedelta64[ms]")
-        )
-        letters = "abcdefgh"
-        colls = [f"collection_{letters[i % 8]}" for i in rng.integers(0, 8, n)]
-        ks = rng.integers(1, 90, n)
-        bboxes = [
-            f"POLYGON (({k} -{k}, {k} {k}, -{k} {k}, -{k} -{k}, {k} -{k}))"
-            for k in ks
-        ]
-        zarrv3.write_group(
-            ZARR_BENCH_STORE,
-            "meta",
-            {"date": dates, "collection": colls, "bbox": bboxes},
-            chunk_rows=65536,
-        )
-
-    table = ZarrTable(ZARR_BENCH_STORE, "/meta")
-    cases = {
-        "zarr_scan_full": lambda: table.to_df(spark).count(),
-        "zarr_scan_projected": lambda: table.to_df(spark, columns=["collection"])
-        .filter("collection = 'collection_a'")
-        .count(),
-        # sorted dates + per-chunk stats -> most chunks pruned at planning
-        "zarr_scan_filtered": lambda: table.to_df(spark)
-        .filter("date >= timestamp_ntz'2023-12-15 00:00:00'")
-        .count(),
-    }
-    out = {}
-    for name, fn in cases.items():
-        times = []
-        for i in range(RUNS + 1):
-            t0 = time.perf_counter()
-            fn()
-            if i > 0:
-                times.append(time.perf_counter() - t0)
-        out[name] = round(statistics.median(times), 4)
-    return out
-
-
-def _time_section(
-    spark,
-    registry,
-    section_names,
-    runs: int,
-    data_dir: str,
-    stamps: dict | None = None,
-    suite_t0: float | None = None,
-) -> dict:
-    """``stamps``/``suite_t0`` (round 13, VERDICT r12 what's-wrong #5):
-    record each query's start offset (seconds since the suite began) so
-    a contended epoch arriving MID-suite localizes to specific members
-    post-hoc instead of being inferred from dict order. Additions-only:
-    timing protocol and the summary-line contract are unchanged."""
-    out: dict[str, float] = {}
-    for name in (n for n in section_names if n in registry):
-        spec = registry[name]
-        times = []
-        if stamps is not None and suite_t0 is not None:
-            stamps[name] = round(time.perf_counter() - suite_t0, 2)
-        for i in range(runs + 1):
-            t0 = time.perf_counter()
-            spec.spark(spark, data_dir).count()
-            dt = time.perf_counter() - t0
-            if i > 0:
-                times.append(dt)
-        out[name] = round(statistics.median(times), 4)
-    return out
-
-
-def _worst(times: dict, k: int = 3) -> list:
-    return [
-        [n, t] for n, t in sorted(times.items(), key=lambda kv: -kv[1])[:k]
-    ]
-
-
-def main() -> None:
-    from zarr_datafusion_search_spark.engine import build_session
-    from zarr_datafusion_search_spark.operators.cache import (
-        release_operator_caches,
-    )
-    from zarr_datafusion_search_spark.plans.registry import load_all
-
-    registry = load_all()
-    spark = build_session(
-        app_name="zdss-bench",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=int(CPUS),
-        extra_conf={
-            "spark.ui.enabled": "false",
-            "spark.driver.memory": "16g",
-            # progress bars on stdout would corrupt the driver's tail parse
-            "spark.ui.showConsoleProgress": "false",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    fixed = (
-        set(HEADLINE)
-        | set(EXTENDED)
-        | set(EXTENDED_R3)
-        | set(EXTENDED_R4)
-        | set(EXTENDED_R5)
-    )
-    # catch-all: EVERY registered query is timed in exactly one section
-    # (coverage, coverage_heavy at 10x, or unpaired-streaming) or excluded
-    # with a reason (VERDICT r03 §3)
-    coverage_names = sorted(
-        n
-        for n in registry
-        if n not in fixed
-        and n not in EXCLUDED
-        and n not in COVERAGE_HEAVY_10X
-        and n not in UNPAIRED_STREAMING
-    )
-
-    # the extended (r2) section's official record is the 10x scale-up —
-    # sub-second-on-both-engines members measure the fixed job constant at
-    # sf0.1, not throughput (VERDICT r04 ask #6). Same deterministic
-    # semantics-preserving builder the scale-trend harness uses. The label
-    # derives from bench_scale.SCALE_K so an exported SPARK_GRAFT_SCALE_K
-    # can never make the record misstate its own measurement scale.
-    from bench_scale import SCALE_DIR, SCALE_K, build_scale_dir
-
-    scale_label = (
-        f"{SCALE_K}x pipeline scale-up (bench_scale.build_scale_dir; "
-        "VERDICT r04 ask #6 — official record at throughput-dominant scale)"
-    )
-    build_scale_dir()
-
-    # section ORDER is part of the protocol: all sf0.1 sections run before
-    # the 10x ones. Measured r7: with the 10x extended section running
-    # before extended_r3, the sf0.1 r3 members ran up to 3x their
-    # fresh-session warm time (frequent_itemset_pairs 6.0 s in-bench vs
-    # 1.9 s fresh — old-gen heap pressure from the 10x section), inflating
-    # the section ratio for reasons unrelated to any plan. The 10x
-    # sections (extended, extended_r4) are the throughput records and run
-    # last; a System.gc() nudge between sections bounds the carry-over.
-    sections = {
-        "headline": (HEADLINE, RUNS, SF_DIR),
-        "coverage": (coverage_names, 1, SF_DIR),
-        "extended": (EXTENDED, RUNS, SCALE_DIR),
-        # official records at 10x like the r2 section (VERDICT r06 ask #6):
-        # extended_r4's 53 sub-second members at sf0.1 measured 53x the
-        # fixed job constant (~6 s of a 25.5 s section), not throughput;
-        # extended_r5's 8 members flip-flopped 1.74-2.14x raw at sf0.1 on
-        # ~1 s of fixed cost in a 5 s section (at 10x Spark wins it
-        # outright: 11.7 s vs 22.0 s measured r7). extended_r3 joined them
-        # later in r7 for the same reason: at sf0.1 it straddled the gate
-        # 1.69-2.37x raw across r5-r7 runs on session-state noise over
-        # ~2.4 s of fixed cost, while at 10x the same members win outright
-        # (0.74x raw measured r7) — the heavy r3 members (cross-corpus
-        # minhash, tfidf, tail-delta, tokenizer audits) are exactly the
-        # throughput class the 10x record exists to measure.
-        "extended_r3": (EXTENDED_R3, RUNS, SCALE_DIR),
-        "extended_r4": (EXTENDED_R4, RUNS, SCALE_DIR),
-        "extended_r5": (EXTENDED_R5, RUNS, SCALE_DIR),
-        "coverage_heavy": (COVERAGE_HEAVY_10X, 1, SCALE_DIR),
-    }
-
-    # contention-gated measurement (VERDICT r07 ask #2): wait for an idle
-    # probe before timing, re-probe AFTER the suite, and re-run the Spark
-    # sections once if either probe says the pass ran on a loaded host —
-    # a contended record is not quotable, so one retry is cheaper than a
-    # round without an arms-length number.
-    for attempt in range(1, BENCH_ATTEMPTS + 1):
-        fixed_cost_s, load1_start = _wait_for_idle(spark)
-        # anchor gate (VERDICT r11 ask #2): the probe + load1 gate passed
-        # two sessions ~20% apart, so a REAL headline query is timed
-        # against its committed cross-round idle band before any section
-        # runs; a breach waits-and-retries like the probe path, and the
-        # reading is stamped either way.
-        anchor_s, anchor_breached = _wait_for_anchor(
-            lambda: registry[ANCHOR_QUERY].spark(spark, SF_DIR).count()
-        )
-        loadavg_start = [round(x, 2) for x in os.getloadavg()]
-        steal_start = _cpu_stat_snapshot()
-
-        spark_times: dict[str, dict] = {}
-        query_start_offsets: dict[str, float] = {}
-        suite_t0 = time.perf_counter()
-        for sec, (names, runs, data_dir) in sections.items():
-            spark_times[sec] = _time_section(
-                spark,
-                registry,
-                names,
-                runs,
-                data_dir,
-                stamps=query_start_offsets,
-                suite_t0=suite_t0,
-            )
-            release_operator_caches()
-            # reclaim the released cache blocks' old-gen now, not during
-            # the next section's timed runs (part of the section-order
-            # protocol)
-            spark.sparkContext._jvm.System.gc()
-
-        # spark-only unpaired members (no DuckDB peer — see
-        # UNPAIRED_STREAMING); 1 warmup + 1 timed run at sf-dir scale.
-        # Stamped too: they run inside the anchored window, and an epoch
-        # arriving at the suite tail must localize to them as well.
-        unpaired_times = _time_section(
-            spark,
-            registry,
-            sorted(UNPAIRED_STREAMING),
-            1,
-            SF_DIR,
-            stamps=query_start_offsets,
-            suite_t0=suite_t0,
-        )
-        release_operator_caches()
-
-        zarr_micro = _zarr_scan_bench(spark)
-        steal_pct = _steal_pct_between(steal_start, _cpu_stat_snapshot())
-        fixed_cost_end_s = _measure_fixed_cost(spark)
-        # END-side anchor (round 12): the start gates cannot catch a
-        # taxed epoch ARRIVING mid-suite (the 20:37 r12 preview run
-        # started clean, then q4/dedup members inflated 2.5x while the
-        # tail recovered — a host memory-tax epoch swept through). A
-        # breached end anchor marks the pass contended and the retry
-        # loop re-runs the Spark sections; wait_for_anchor's poll also
-        # absorbs the epoch before attempt 2 starts.
-        anchor_end_s, anchor_end_breached = _wait_for_anchor(
-            lambda: registry[ANCHOR_QUERY].spark(spark, SF_DIR).count()
-        )
-        contended = (
-            is_contended(fixed_cost_s, fixed_cost_end_s, load1_start)
-            or anchor_breached
-            or anchor_end_breached
-        )
-        if not contended:
-            break
-
-    # paired DuckDB measurement: identical SQL over the same parquet, same
-    # warmup+median protocol, run AFTER all Spark timing so DuckDB never
-    # contends with executors. The pass is bracketed by its own probes
-    # (ADVICE r9): contention arriving DURING the denominator timing
-    # flatters every ratio while the Spark-side gate stamps
-    # contended:false — a breach folds into the record's contended flag.
-    from zarr_datafusion_search_spark.benchutil import (
-        duck_pass_stamp,
-        measure_duck_probe,
-        wait_for_duck_idle,
-    )
-
-    # the start probe WAITS for external load / post-suite executor
-    # idle-down to settle instead of stamping the transient as contention
-    # (round 10). NOTE: unlike bench_scale.py, this harness times the
-    # DuckDB pass with the Spark JVM still alive (spark.stop() runs after
-    # the duck pass) — the wait absorbs post-suite thread-pool decay, not
-    # stop() teardown (ADVICE r10).
-    duck_probe_s, duck_load1 = wait_for_duck_idle()
-    duck_times: dict[str, dict] = {}
-    duck_skipped: list[str] = []
-    for sec, (names, runs, data_dir) in sections.items():
-        dt, sk = _duckdb_times(
-            registry, [n for n in names if n in registry], runs, data_dir
-        )
-        duck_times[sec] = dt
-        duck_skipped.extend(sk)
-    duck_pass = duck_pass_stamp(
-        duck_probe_s, measure_duck_probe(), load1_start_gated=duck_load1
-    )
-
-    summary_sections = {}
-    detail_sections = {}
-    for sec in sections:
-        st, dtm = spark_times[sec], duck_times[sec]
-        paired = [n for n in st if n in dtm]
-        s_tot = round(sum(st[n] for n in paired), 4)
-        d_tot = round(sum(dtm[n] for n in paired), 4)
-        ratio = round(s_tot / max(d_tot, 1e-9), 2)
-        net = round(
-            max(s_tot - len(paired) * fixed_cost_s, 0.0) / max(d_tot, 1e-9), 2
-        )
-        summary_sections[sec] = {
-            "n": len(paired),
-            "spark_s": s_tot,
-            "duck_s": d_tot,
-            "ratio": ratio,
-            "ratio_net": net,
-        }
-        detail_sections[sec] = {
-            "spark_queries": st,
-            "duckdb_queries": dtm,
-            "spark_total": s_tot,
-            "duckdb_total": d_tot,
-            "ratio": ratio,
-            "ratio_net_of_fixed_cost": net,
-            "slowest3_spark": _worst(st),
-            "runs_per_query": sections[sec][1],
-            "data": scale_label if sections[sec][2] != SF_DIR else SF_DIR,
-        }
-        if sec == "coverage":
-            # the residual coverage section is ~100 sub-second queries at
-            # sf0.1: Spark pays its ~0.1-0.4 s job constant per query while
-            # DuckDB pays ~0.01-0.09 s, so the section RAW ratio measures
-            # that constant n times over, not engine throughput (VERDICT
-            # r08 ask #6). Flag it explicitly and publish per-query
-            # net-of-fixed-cost ratios so the floor is inspectable; the
-            # throughput statements live in the 10x+ sections and the
-            # BENCH_SCALE records, where per-query work dominates.
-            per_q_net = {
-                n: round(
-                    max(st[n] - fixed_cost_s, 0.0) / max(dtm[n], 1e-9), 2
-                )
-                for n in paired
-            }
-            floor_note = (
-                "raw ratio is n_queries x Spark's fixed job constant over "
-                "sub-second queries, not throughput; see per-query net "
-                "ratios and the 10x/scale sections for throughput"
-            )
-            summary_sections[sec]["fixed_cost_floor"] = True
-            # per_q_net can be empty if every coverage member was skipped
-            # or timed out on the DuckDB side (ADVICE r9) — a null median
-            # beats aborting the whole record write
-            summary_sections[sec]["ratio_net_median_per_query"] = (
-                round(statistics.median(per_q_net.values()), 2)
-                if per_q_net
-                else None
-            )
-            detail_sections[sec]["fixed_cost_floor"] = True
-            detail_sections[sec]["fixed_cost_floor_note"] = floor_note
-            detail_sections[sec]["per_query_net_ratio"] = per_q_net
-
-    headline_total = round(sum(spark_times["headline"].values()), 4)
-
-    # host-state stamp (VERDICT r06 ask #2, load1 ceiling added r9): the
-    # warmed fixed-cost probe is a direct measurement of scheduler latency
-    # under whatever else the host is running (probed before AND after the
-    # suite); load1 at suite start guards the drift the probe alone missed
-    # in r8. A record breaching either is contended and NOT quotable.
-    host_state = host_state_stamp(
-        loadavg_start,
-        fixed_cost_s,
-        fixed_cost_end_s,
-        contended,
-        attempt,
-        load1_start_gated=load1_start,
-        duck_pass=duck_pass,
-        anchor={
-            "anchor_query": ANCHOR_QUERY,
-            "anchor_s": anchor_s,
-            "anchor_end_s": anchor_end_s,
-            "anchor_ceiling_s": ANCHOR_CEILING_S,
-            "anchor_breached": anchor_breached or anchor_end_breached,
-        },
-        query_start_offsets_s=query_start_offsets,
-        steal={
-            "spark_window_steal_pct": steal_pct,
-            # one-core sustained memory-write probe, taken right after
-            # the suite: the r11 drift's residual mechanism is the
-            # hypervisor taxing DRAM-bound writes (dirty-page tracking),
-            # billed as sys time — ~1.2 GB/s taxed vs several GB/s
-            # healthy (round 12 isolation)
-            **_measure_mem_bw(),
-            "note": "hypervisor steal share of all cpu ticks across the "
-            "Spark timing window (round 12: measured ~1% idle, 11%+ "
-            "under load during the r11-regression A/B — the drift class "
-            "load1 and the trivial-job probe both miss)",
-        },
-    )
-
-    detail = {
-        "host_state": host_state,
-        "sections": detail_sections,
-        "fixed_cost_s": fixed_cost_s,
-        "fixed_cost_note": "median trivial-job wall-clock; ratio_net = "
-        "(spark_total - n*fixed_cost_s)/duck_total — the constant "
-        "amortizes at scale, the raw ratio is what sf0.1 users see",
-        "zarr_microbench": zarr_micro,
-        "zarr_microbench_total": round(sum(zarr_micro.values()), 4),
-        "unpaired_streaming": {
-            "spark_queries": unpaired_times,
-            "reasons": UNPAIRED_STREAMING,
-        },
-        "duckdb_skipped": sorted(set(duck_skipped)),
-        "excluded": EXCLUDED,
-        "duck_timeout_s": DUCK_TIMEOUT_S,
-        "sf": _sf_from_dir(SF_DIR),
-        "config": {
-            "master": f"local[{CPUS}]",
-            "runs_per_query": RUNS,
-            "runs_per_query_coverage": 1,
-            "aqe": True,
-        },
-        "protocol": "1 warmup + median of runs_per_query; both engines "
-        "timed via count(*) over the full query (same pruning "
-        "opportunities, no client row conversion); DuckDB run after all "
-        "Spark timing in the same process; fresh-session numbers in "
-        "BASELINE.md",
-    }
-    with open(DETAIL_PATH, "w") as fh:
-        json.dump(detail, fh, indent=1)
-
-    summary = {
-        "metric": "headline-suite median wall-clock (sum over queries)",
-        "value": headline_total,
-        "unit": "sec",
-        "queries": spark_times["headline"],
-        "sections": summary_sections,
-        "extended_data": f"{SCALE_K}x",
-        "fixed_cost_s": fixed_cost_s,
-        "load1": loadavg_start[0],
-        "anchor_s": anchor_s,
-        "steal_pct": steal_pct,
-        "contended": host_state["contended"],
-        "unpaired_streaming_s": unpaired_times,
-        "duckdb_skipped": sorted(set(duck_skipped)),
-        "n_excluded": len(EXCLUDED),
-        "detail_file": "BENCH_DETAIL.json",
-        "sf": _sf_from_dir(SF_DIR),
-    }
-    line = json.dumps(summary, separators=(",", ":"))
-    if len(line) > 1800:
-        # keep the last line inside the driver's tail capture: shed the
-        # per-query floats first (they live in the detail file anyway)
-        summary["queries"] = {"see": "BENCH_DETAIL.json"}
-        line = json.dumps(summary, separators=(",", ":"))
-    spark.stop()
-    sys.stdout.flush()
-    print(line)
+def main() -> int:
+    root = os.path.dirname(os.path.abspath(__file__))
+    lines = []
+    with subprocess.Popen([sys.executable, *COMMAND], cwd=root, stdout=subprocess.PIPE, text=True) as proc:
+        for line in proc.stdout:
+            sys.stdout.write(line)
+            sys.stdout.flush()
+            lines.append(line)
+    line, code = summary(proc.returncode, lines)
+    if line is not None:
+        print(line, flush=True)
+    return code
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -285,40 +285,3 @@ def test_probe_cache_invalidates_on_file_rewrite(spark, tmp_path):
     ).write.mode("overwrite").parquet(p)
     df2 = spark.read.parquet(p).filter(F.col("vec_id") >= 0)
     assert similarity._bounded_count_probe(df2, 65) == 30
-
-
-# ---------------------------------------------------------------------------
-# instrument hook (the pair-wall decomposition harness's measurement tap)
-# ---------------------------------------------------------------------------
-
-
-def test_semdedup_instrument_hook_is_value_neutral(spark, sf_dir):
-    # bench_semdedup_decompose.py relies on the accumulators covering the
-    # real stages; the hook must not perturb the emitted pairs, and the
-    # counters must reconcile with the corpus (rows == corpus size when no
-    # cell exceeds the hot-cell cap; one cell count per quantizer cell).
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    plain = canonicalize(
-        *spark_result(
-            similarity.semantic_dedup_pairs(
-                emb, threshold=0.4, n_centroids="auto"
-            )
-        )
-    )
-    sc = spark.sparkContext
-    acc = {k: sc.accumulator(0.0) for k in ("assign_s", "prep_s", "gemm_s", "emit_s")}
-    acc.update({k: sc.accumulator(0) for k in ("cells", "rows", "pairs")})
-    inst_df = similarity.semantic_dedup_pairs(
-        emb, threshold=0.4, n_centroids="auto", instrument=acc
-    )
-    # collect ONCE: any further action on inst_df re-runs the plan and
-    # doubles every accumulator mid-test (ADVICE r10)
-    inst_cols, inst_rows = spark_result(inst_df)
-    assert canonicalize(inst_cols, inst_rows) == plain
-    n = emb.count()
-    assert acc["rows"].value == n
-    assert acc["cells"].value == max(
-        16, -(-n // similarity.SEMDEDUP_TARGET_CELL_ROWS)
-    )
-    assert acc["pairs"].value >= len(inst_rows)  # pre-threshold emissions
-    assert acc["gemm_s"].value > 0.0 and acc["assign_s"].value > 0.0

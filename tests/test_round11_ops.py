@@ -140,35 +140,6 @@ def test_semdedup_auto_k_sqrt_switch_matches_duckdb():
     con.close()
 
 
-def test_duck_pass_stamp_raw_breach_stays_contended(monkeypatch):
-    """ADVICE r10: the end-probe settle loop must not launder a large raw
-    breach into contended:false, and the record must carry the settle
-    duration and the gated start load1."""
-    from zarr_datafusion_search_spark import benchutil
-
-    monkeypatch.setattr(benchutil, "measure_duck_probe", lambda: 0.01)
-    monkeypatch.setattr(benchutil.time, "sleep", lambda s: None)
-    env = benchutil.DUCK_PROBE_ENVELOPE_S
-    # mild breach that settles: teardown-decay class -> not contended
-    st = benchutil.duck_pass_stamp(0.01, env * 1.2, load1_start_gated=1.5)
-    assert not st["duck_contended"]
-    assert st["duck_probe_end_s"] == 0.01
-    assert st["duck_probe_end_raw_s"] == pytest.approx(env * 1.2)
-    assert st["duck_load1_start_gated"] == 1.5
-    # raw breach beyond the factor: contended — and the settle loop is
-    # SKIPPED outright (ADVICE r11: the verdict is already final, so the
-    # stamp must not spend up to 60 s settling a reading it cannot use);
-    # the end value therefore stays the raw breach
-    st = benchutil.duck_pass_stamp(0.01, env * 1.6)
-    assert st["duck_contended"]
-    assert st["duck_probe_end_s"] == pytest.approx(env * 1.6)
-    assert st["duck_probe_end_settle_wait_s"] == 0.0
-    # clean end probe: no settle wait at all
-    st = benchutil.duck_pass_stamp(0.01, 0.01)
-    assert st["duck_probe_end_settle_wait_s"] == 0.0
-    assert not st["duck_contended"]
-
-
 def test_cap_from_hist_heavy_count():
     """heavy_nodes counts nodes STRICTLY above the cap (0 exactly when
     cap >= max degree), and the row masses feeding the cost gate are

@@ -1,82 +1,12 @@
-"""Round-12 pins: the bench anchor gate, the bounded components oracle,
-the LPA split's null-safe keys, and the duck settle short-circuit.
+"""Round-12 pins: the bounded components oracle, the LPA split's null-safe
+keys, BLAS thread pinning and the assignment stage's banded re-check.
 
-Reference parity context: the reference repo has no bench harness or
-graph operators (it is a Zarr scan provider, `src/table_provider.rs`);
-these pins guard the repo's own measurement protocol and LLM-pipeline
-extensions.
+Reference parity context: the reference repo has no graph operators (it is
+a Zarr scan provider, `src/table_provider.rs`); these pins guard the repo's
+LLM-pipeline extensions.
 """
 
 from __future__ import annotations
-
-import time
-
-import pytest
-
-
-# ---------------------------------------------------------------------------
-# anchor gate (VERDICT r11 ask #2)
-# ---------------------------------------------------------------------------
-
-
-def test_anchor_gate_catches_loaded_session(monkeypatch):
-    """A deliberately slow anchor (simulating the ~20-45% drift the probe
-    + load1 gate admitted in r8 and r11) must come back breached after the
-    wait budget, and the stamped reading must be the measured median."""
-    from zarr_datafusion_search_spark import benchutil
-
-    monkeypatch.setattr(benchutil, "CONTENTION_WAIT_S", 0.2)
-    monkeypatch.setattr(benchutil, "ANCHOR_CEILING_S", 0.02)
-    calls = []
-
-    def slow_anchor():
-        calls.append(1)
-        time.sleep(0.05)
-
-    anchor_s, breached = benchutil.wait_for_anchor(slow_anchor)
-    assert breached is True
-    assert anchor_s > 0.02
-    # protocol: 1 warmup + 3 timed per poll
-    assert len(calls) % 4 == 0
-
-
-def test_anchor_gate_passes_idle_session(monkeypatch):
-    from zarr_datafusion_search_spark import benchutil
-
-    monkeypatch.setattr(benchutil, "CONTENTION_WAIT_S", 0.2)
-    monkeypatch.setattr(benchutil, "ANCHOR_CEILING_S", 0.05)
-    anchor_s, breached = benchutil.wait_for_anchor(lambda: None)
-    assert breached is False
-    assert anchor_s <= 0.05
-
-
-def test_anchor_query_is_registered_and_breach_contends():
-    """bench.py's anchor must exist in the registry (a rename would
-    silently disable the gate), and its breach must fold into the
-    record's contended verdict (the code path asserted by reading the
-    module source would be fragile — instead pin the constants bench.py
-    consumes)."""
-    import bench
-    from zarr_datafusion_search_spark.benchutil import host_state_stamp
-    from zarr_datafusion_search_spark.plans.registry import load_all
-
-    assert bench.ANCHOR_QUERY in load_all()
-    hs = host_state_stamp(
-        [0.1, 0.1, 0.1],
-        0.12,
-        0.12,
-        True,  # contended already folded by bench.py: is_contended or anchor
-        1,
-        anchor={
-            "anchor_query": bench.ANCHOR_QUERY,
-            "anchor_s": 0.55,
-            "anchor_ceiling_s": 0.44,
-            "anchor_breached": True,
-        },
-    )
-    assert hs["contended"] is True
-    assert hs["anchor"]["anchor_breached"] is True
-    assert hs["anchor"]["anchor_s"] == 0.55
 
 
 # ---------------------------------------------------------------------------
@@ -204,48 +134,6 @@ def test_engine_pins_one_blas_thread_per_worker(spark):
     assert (
         spark.conf.get("spark.executorEnv.OPENBLAS_NUM_THREADS") == "1"
     )
-
-
-# ---------------------------------------------------------------------------
-# duck settle short-circuit (ADVICE r11)
-# ---------------------------------------------------------------------------
-
-
-def test_duck_settle_loop_skipped_when_raw_breach_is_final(monkeypatch):
-    """When the raw end probe already exceeds DUCK_RAW_BREACH_FACTOR x the
-    envelope the verdict is contended no matter what a settle re-probe
-    would read — the stamp must return immediately (no 60 s loop) with
-    settle_wait_s == 0."""
-    from zarr_datafusion_search_spark import benchutil
-
-    calls = []
-    monkeypatch.setattr(
-        benchutil, "measure_duck_probe", lambda: calls.append(1) or 0.1
-    )
-    raw = benchutil.DUCK_RAW_BREACH_FACTOR * benchutil.DUCK_PROBE_ENVELOPE_S
-    t0 = time.monotonic()
-    stamp = benchutil.duck_pass_stamp(0.1, raw + 0.01)
-    assert time.monotonic() - t0 < 1.0
-    assert stamp["duck_contended"] is True
-    assert stamp["duck_probe_end_settle_wait_s"] == 0.0
-    assert stamp["duck_probe_end_raw_s"] == raw + 0.01
-    assert calls == []  # settle loop never probed
-
-
-def test_duck_settle_loop_still_runs_on_moderate_breach(monkeypatch):
-    """A moderate breach (teardown-decay class) still settles and clears."""
-    from zarr_datafusion_search_spark import benchutil
-
-    readings = iter([0.1])
-    monkeypatch.setattr(
-        benchutil, "measure_duck_probe", lambda: next(readings)
-    )
-    monkeypatch.setattr(benchutil.time, "sleep", lambda s: None)
-    env = benchutil.DUCK_PROBE_ENVELOPE_S
-    stamp = benchutil.duck_pass_stamp(0.1, env + 0.01)
-    assert stamp["duck_contended"] is False
-    assert stamp["duck_probe_end_s"] == 0.1
-    assert stamp["duck_probe_end_raw_s"] == pytest.approx(env + 0.01)
 
 
 # ---------------------------------------------------------------------------

@@ -1,18 +1,14 @@
 """Round-9 hardening: the corpus-sized SemDeDup quantizer (the r8 300x
-scale-killer fix), its SQL-replayed sizing rule, the lsh_topk empty-path
-schema parity (ADVICE r8), and bench_scale filter hygiene (ADVICE r8)."""
+scale-killer fix), its SQL-replayed sizing rule and the lsh_topk empty-path
+schema parity (ADVICE r8)."""
 
 import os
-import subprocess
-import sys
 
 import pytest
 
 from tests.oracle_utils import canonicalize, duckdb_result, spark_result
 from zarr_datafusion_search_spark.operators import similarity
 from zarr_datafusion_search_spark.plans.curation import _semantic_oracle
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 # ---------------------------------------------------------------------------
@@ -113,32 +109,3 @@ def test_lsh_topk_empty_queries_keeps_input_id_types(spark):
     assert fields["neighbor_id"] == "int"
     assert fields["cosine"] == "double"
     assert fields["rank"] == "int"
-
-
-# ---------------------------------------------------------------------------
-# bench_scale query-filter hygiene (ADVICE r8)
-# ---------------------------------------------------------------------------
-
-
-def _import_bench_scale(env_filter):
-    env = dict(os.environ)
-    env["SPARK_GRAFT_SCALE_QUERIES"] = env_filter
-    return subprocess.run(
-        [sys.executable, "-c", "import bench_scale; print(len(bench_scale.SCALE_QUERIES))"],
-        capture_output=True,
-        text=True,
-        cwd=REPO,
-        env=env,
-    )
-
-
-def test_scale_filter_rejects_unknown_names():
-    r = _import_bench_scale("text_bm25_search,no_such_query")
-    assert r.returncode != 0
-    assert "no_such_query" in (r.stdout + r.stderr)
-
-
-def test_scale_filter_strips_whitespace():
-    r = _import_bench_scale(" text_bm25_search , dedup_semantic_auto ")
-    assert r.returncode == 0, r.stderr
-    assert r.stdout.strip().endswith("2")

@@ -582,3 +582,43 @@ def test_nan_chunk_stats_never_prune(spark, tmp_path):
     assert _jvm_ranges(df) == [(0, 2)]
     got = [r.f for r in df.collect()]
     assert np.isnan(got[0]) and got[1:] == [0.9]
+
+
+FLOAT_FILTERS = [
+    "f > CAST(0.5 AS {t})",
+    "f >= CAST(0.5 AS {t})",
+    "f < CAST(0.5 AS {t})",
+    "f <= CAST(0.3 AS {t})",
+    "f = CAST('NaN' AS {t})",
+    "f = CAST(0.9 AS {t})",
+    "f IN (CAST(0.9 AS {t}), CAST('NaN' AS {t}))",
+]
+
+
+@pytest.mark.parametrize("dtype,spark_type", [("float32", "FLOAT"), ("float64", "DOUBLE")])
+def test_float_filters_follow_spark_nan_semantics(spark, tmp_path, dtype, spark_type):
+    """Spark orders NaN above every value and has NaN = NaN; Arrow compares
+    NaN false. Both readers must return the rows Spark returns over the same
+    values, while a float filter still prunes a chunk that holds no NaN."""
+    from pyspark.sql.datasource import GreaterThan
+    from zarr_datafusion_search_spark.sources.zarr_datasource import ZarrReader
+    from zarr_datafusion_search_spark.sources.zarr_table import _ensure_registered
+
+    _ensure_registered(spark)
+    values = [0.1, np.nan, 0.9, np.nan, 0.3, 2.0, 0.2, 0.25, 0.3]
+    store = str(tmp_path / f"{dtype}.zarr")
+    zarrv3.write_group(
+        store, "/g", {"i": np.arange(len(values)), "f": np.array(values, dtype=dtype)}, chunk_rows=3
+    )
+    want_df = spark.createDataFrame(
+        [(i, float(v)) for i, v in enumerate(values)], f"i long, f {spark_type.lower()}"
+    )
+    for cond in (c.format(t=spark_type) for c in FLOAT_FILTERS):
+        want = sorted(r.i for r in want_df.filter(cond).collect())
+        assert sorted(r.i for r in python_df(spark, store).filter(cond).collect()) == want, cond
+        assert sorted(r.i for r in jvm_df(spark, store).filter(cond).collect()) == want, cond
+
+    reader = ZarrReader(store, "/g", ZarrTable(store, "/g").schema, partition_rows=3)
+    gt = GreaterThan(("f",), 0.5)
+    assert list(reader.pushFilters([gt])) == [gt]  # rows are left to Spark
+    assert [(p.start, p.stop) for p in reader.partitions()] == [(0, 3), (3, 6)]

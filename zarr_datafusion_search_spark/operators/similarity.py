@@ -1534,7 +1534,6 @@ def semantic_cell_assignments(
     n_centroids: int | str = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    instrument: dict | None = None,
 ) -> DataFrame | None:
     """The SemDeDup coarse-quantizer assignment relation:
     ``(id_col, vec_col, cell)`` with ``cell`` = the centroid id each
@@ -1555,10 +1554,6 @@ def semantic_cell_assignments(
     GEMM-vs-fold summation order sits in the tolerance class the 6dp
     round already absorbs; zero-norm vectors divide by NORM_EPS like
     every other GEMM path here.
-
-    ``instrument``: optional dict of Spark accumulators; only the
-    ``"assign_s"`` key is read here, and only if present — a partial
-    dict is ignored rather than raising executor-side (ADVICE r11).
     """
     if n_centroids == "auto":
         n_rows = metadata_row_count(corpus)
@@ -1604,11 +1599,8 @@ def semantic_cell_assignments(
     _sbuf: list = []  # one reusable (rows, k) f32 score buffer per task
 
     def _assign_cell_fn(vecs):
-        import time as _time
-
         if not len(vecs):
             return pd.Series([], dtype="int64")
-        _t0 = _time.perf_counter()
         V = np.vstack(vecs.to_numpy()).astype(np.float64)
         Vn = V / np.maximum(
             np.linalg.norm(V, axis=1, keepdims=True), NORM_EPS
@@ -1661,15 +1653,7 @@ def semantic_cell_assignments(
             Sm = Vn[miss] @ cmat_t
             Rm = np.copysign(np.floor(np.abs(Sm) * 1e6 + 0.5), Sm)
             out[miss] = cent_ids[np.argmax(Rm, axis=1)]
-        res = pd.Series(out)
-        # key-guarded (ADVICE r11): `instrument` is documented as a dict
-        # of Spark ACCUMULATORS keyed like semantic_dedup_pairs builds it,
-        # but this function is public — a caller's partial dict must not
-        # raise KeyError executor-side. += keeps accumulator semantics
-        # (Accumulator.__iadd__ is .add); plain-float dicts work too.
-        if instrument and "assign_s" in instrument:
-            instrument["assign_s"] += _time.perf_counter() - _t0
-        return res
+        return pd.Series(out)
 
     # explicit pandas_udf call (not the decorator): `from __future__ import
     # annotations` stringifies type hints, which the decorator's signature
@@ -1695,7 +1679,6 @@ def semantic_dedup_pairs(
     vec_col: str = "embedding",
     max_cell_rows: int = SEMDEDUP_MAX_CELL_ROWS,
     gemm_block_rows: int = SEMDEDUP_GEMM_BLOCK_ROWS,
-    instrument: dict | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication: cluster, then exact cosine
     pairs WITHIN each cluster only.
@@ -1759,27 +1742,12 @@ def semantic_dedup_pairs(
       block x |cell|, never |cell|^2. Pairs both of whose endpoints were
       sampled out of a hot cell are not emitted — the standard SemDeDup
       recall trade, taken only above the cap.
-
-    ``instrument`` (optional) is a dict of Spark accumulators — keys
-    ``assign_s, prep_s, gemm_s, emit_s, cells, rows, pairs`` — that the
-    Python stages add their wall-clock / counts to, summed across tasks.
-    It exists for the pair-stage wall decomposition harness
-    (``bench_semdedup_decompose.py``): Python compute seconds measured
-    here, subtracted from the JVM stage's executorRunTime, isolate the
-    Arrow/pandas-assembly/shuffle share. ``None`` (the default) costs one
-    branch per cell. Caveat (ADVICE r10): accumulator updates inside
-    pandas UDFs are TRANSFORMATION-side, so Spark does not make them
-    exactly-once — a retried or speculatively re-run task double-counts
-    its cells/rows/pairs and timings. The decomposition harness asserts
-    zero failed tasks before trusting the numbers; don't read
-    ``instrument`` as exact under task retries.
     """
     assigned = semantic_cell_assignments(
         corpus,
         n_centroids=n_centroids,
         id_col=id_col,
         vec_col=vec_col,
-        instrument=instrument,
     )
     if assigned is None:
         empty = corpus.sparkSession.createDataFrame(
@@ -1807,9 +1775,6 @@ def semantic_dedup_pairs(
                     "_cos": pd.Series([], dtype="float64"),
                 }
             )
-        import time as _time
-
-        _t0 = _time.perf_counter()
         if len(pdf) > max_cell_rows:
             # hot-cell cap: deterministic downsample by splitmix64(id)
             h = _splitmix64(pdf[id_col].to_numpy().astype(np.uint64))
@@ -1835,7 +1800,6 @@ def semantic_dedup_pairs(
         blk = min(gemm_block_rows, n)
         s32 = np.empty((blk, n), dtype=np.float32)
         cut32 = np.float32(cutoff - 1e-4)
-        _t1 = _time.perf_counter()
         out_a, out_b, out_c = [], [], []
         for s in range(0, n, gemm_block_rows):
             rows = n32[s : s + gemm_block_rows]
@@ -1853,26 +1817,15 @@ def semantic_dedup_pairs(
             out_a.append(np.where(sw, b, a))
             out_b.append(np.where(sw, a, b))
             out_c.append(c64[ok])
-        _t2 = _time.perf_counter()
         a = np.concatenate(out_a)
-        b = np.concatenate(out_b)
-        res = pd.DataFrame(
+        return pd.DataFrame(
             {
                 "id_a": a,
-                "id_b": b,
+                "id_b": np.concatenate(out_b),
                 "centroid_id": np.full(len(a), cell),
                 "_cos": np.concatenate(out_c),
             }
         )
-        if instrument:
-            _t3 = _time.perf_counter()
-            instrument["prep_s"] += _t1 - _t0
-            instrument["gemm_s"] += _t2 - _t1
-            instrument["emit_s"] += _t3 - _t2
-            instrument["cells"] += 1
-            instrument["rows"] += n
-            instrument["pairs"] += len(a)
-        return res
 
     # the cell GEMM emits the cosine itself (round 7): the previous plan
     # joined the (at 100x synthetic scale) ~10M candidate pairs back

@@ -854,8 +854,7 @@ def ann_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
 #: At any OTHER corpus size the oracle deliberately returns 0 rows — a
 #: LOUD mismatch, chosen over a vacuous always-true fallback (the r4
 #: boolean this replaces); extend the map when new fixture sizes ship.
-#: The query is deliberately absent from bench_scale's SCALE_QUERIES for
-#: the same reason.
+#: For the same reason the query cannot run at a scaled-up corpus size.
 _IVF_PINNED_HITS = {
     1000: [(0, 9), (1, 8), (2, 9), (3, 9), (4, 8), (5, 9), (6, 10), (7, 9)],
     10000: [(0, 9), (1, 8), (2, 9), (3, 9), (4, 7), (5, 9), (6, 7), (7, 8)],

@@ -18,7 +18,9 @@ whole-table-in-one-batch scan (src/table_provider.rs:193-220,237):
   never uses it (src/table_provider.rs:228-229).
 - **Filter pushdown**: ``pushFilters`` claims simple comparison predicates
   and evaluates them on decoded Arrow batches before shipping rows to the
-  JVM; the reference ignores ``_filters`` entirely (src/table_provider.rs:85).
+  JVM; comparisons on float columns only prune chunks and are left to Spark
+  (NaN semantics). The reference ignores ``_filters`` entirely
+  (src/table_provider.rs:85).
 
 Usage::
 
@@ -54,7 +56,7 @@ from pyspark.sql.datasource import (
     StringStartsWith,
     WriterCommitMessage,
 )
-from pyspark.sql.types import StructType
+from pyspark.sql.types import DoubleType, FloatType, StructType
 
 from zarr_datafusion_search_spark.sources import zarrv3
 from zarr_datafusion_search_spark.sources.typemap import (
@@ -261,7 +263,10 @@ class ZarrDataSource(DataSource):
 class ZarrReader(_ZarrScan, DataSourceReader):
     def __init__(self, *args, **kwargs):
         super().__init__(*args, **kwargs)
+        #: every pushed filter on a read column; prunes chunks by stats
         self._filters: list[Filter] = []
+        #: the claimed subset, evaluated on the decoded batches
+        self._row_filters: list[Filter] = []
 
     # -- filter pushdown ----------------------------------------------------
 
@@ -278,14 +283,20 @@ class ZarrReader(_ZarrScan, DataSourceReader):
         StringEndsWith,
         StringContains,
     )
+    _COMPARISONS = (EqualTo, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, In)
 
     def pushFilters(self, filters: List[Filter]) -> Iterator[Filter]:
         """Claim simple predicates; evaluate them batch-side in ``read``.
 
         The reference discards pushed filters (src/table_provider.rs:85); we
         apply them on the decoded Arrow batch so filtered rows never cross
-        the Python->JVM boundary.
+        the Python->JVM boundary. Comparisons on float columns are yielded
+        back after they are kept for chunk pruning: Spark orders NaN above
+        every value and has ``NaN = NaN``, while in Arrow NaN compares false.
         """
+        floats = {
+            f.name for f in self._schema.fields if isinstance(f.dataType, (FloatType, DoubleType))
+        }
         for f in filters:
             if (
                 isinstance(f, self._SUPPORTED)
@@ -293,6 +304,10 @@ class ZarrReader(_ZarrScan, DataSourceReader):
                 and f.attribute[0] in self._columns
             ):
                 self._filters.append(f)
+                if isinstance(f, self._COMPARISONS) and f.attribute[0] in floats:
+                    yield f  # chunk pruning only: Spark evaluates the rows
+                else:
+                    self._row_filters.append(f)
             else:
                 yield f  # let Spark evaluate the rest
 
@@ -359,9 +374,7 @@ class ZarrReader(_ZarrScan, DataSourceReader):
         the filter shape doesn't support pruning."""
         import datetime as _dt
 
-        if not isinstance(
-            f, (EqualTo, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, In)
-        ):
+        if not isinstance(f, ZarrReader._COMPARISONS):
             return None
 
         def conv(v):
@@ -402,7 +415,7 @@ class ZarrReader(_ZarrScan, DataSourceReader):
     def read(self, partition: RowRange) -> Iterator["pa.RecordBatch"]:  # noqa: F821
         # a partition may span chunks that pruning dropped: skip them again
         for batch in self._decode(partition, self._chunk_may_match):
-            if self._filters:
+            if self._row_filters:
                 mask = self._eval_filters(batch)
                 if mask is not None:
                     batch = batch.filter(mask)
@@ -413,7 +426,7 @@ class ZarrReader(_ZarrScan, DataSourceReader):
         import pyarrow.compute as pc
 
         mask = None
-        for f in self._filters:
+        for f in self._row_filters:
             col = batch.column(f.attribute[0])
             if isinstance(f, EqualTo):
                 m = pc.equal(col, f.value)
